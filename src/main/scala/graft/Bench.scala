@@ -6,14 +6,8 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
+    val cpus = graft.core.Session.cpus
+    val spark = graft.core.Session.builder(s"local[$cpus]", cpus)
       // Plan-fingerprint stability: simpleString TRUNCATES long
       // metadata (DataFilters, PushedFilters) at 100 chars, and the
       // truncation point depends on how many DIGITS the plan's
@@ -414,7 +408,7 @@ object Bench {
           "-cp", System.getProperty("java.class.path"), "graft.Bench", regex)
         val pb = new ProcessBuilder(cmd: _*)
         pb.environment().put("SPARK_GRAFT_SF_DIR", sfDir)
-        pb.environment().put("SPARK_GRAFT_CPUS", cpus)
+        pb.environment().put("SPARK_GRAFT_CPUS", cpus.toString)
         // the child is JIT-cold: with one run per query its number is
         // dominated by codegen/JIT compilation, not the plan. Five
         // runs put the cold first runs above the median (three was not

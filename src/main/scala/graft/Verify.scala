@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -9,25 +8,22 @@ object Verify {
     // re-checks (the driver always passes two args = run everything)
     val (sfDir, outDir) = (args(0), args(1))
     val pattern = if (args.length > 2) args(2) else ".*"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet stores timestamp[ns]; Spark's vectorized reader
-      // rejects TIMESTAMP(NANOS) — read as long, Tables.load converts.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.core.Session.local()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
-      if (name.matches(pattern))
-        try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        catch { case e: Throwable =>
+    // a query that throws leaves no output dir; failed.json names it
+    // and its message so the gate reports it instead of missing it
+    val failed = SparkEntry.queries.toSeq.flatMap {
+      case (name, fn) if name.matches(pattern) =>
+        try {
+          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+            .parquet(s"$outDir/$name")
+          None
+        } catch { case e: Throwable =>
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          Some(name -> String.valueOf(e.getMessage))
         }
+      case _ => None
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
@@ -44,6 +40,8 @@ object Verify {
     val json = SparkEntry.oracleSql
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/failed.json"), failed
+      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}"))
     // rows-only queries carry no SQL oracle by declared design — their
     // statistical envelopes (binomial bounds, sketch error bounds,
     // recall/metric floors) are computed HERE so the correctness

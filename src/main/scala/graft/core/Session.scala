@@ -10,12 +10,17 @@ import org.apache.spark.sql.SparkSession
   * per-job setting sized to input volume), and the nanos-as-long
   * legacy flag required to scan events.parquet (timestamp[ns]).
   *
-  * `spark.sql.extensions` installs [[graft.functions.GraftExtensions]]
-  * so every session — including pure-SQL users — has `vec_dot` from
-  * construction, no programmatic register call needed.
+  * `spark.sql.extensions` installs [[graft.functions.GraftExtensions]],
+  * the engine's only install path for its functions and rules, so
+  * every session — including pure-SQL users — has them from
+  * construction. Every main builds its session here.
   */
 object Session {
-  def local(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession =
+  /** Local core count: `SPARK_GRAFT_CPUS`, else the machine's cores. */
+  def cpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
+
+  def local(cores: Int = cpus): SparkSession =
     builder(s"local[$cores]", cores).getOrCreate()
 
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =

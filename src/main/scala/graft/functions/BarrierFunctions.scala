@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
@@ -55,12 +55,6 @@ object BarrierFunctions {
     (FunctionIdentifier(fnName),
       new ExpressionInfo(classOf[EvalOnce].getName, fnName),
       (children: Seq[Expression]) => EvalOnce(children.head))
-
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier(fnName)))
-      registry.registerFunction(injection._1, injection._2, injection._3)
-  }
 
   /** Column-API entry: identity value, optimizer barrier. */
   def evalOnce(c: Column): Column = call_function(fnName, c)

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -75,7 +75,7 @@ case class BloomMightContain(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Build + probe helpers and session registration for
+/** Build + probe helpers and the function injection for
   * [[BloomMightContain]].
   */
 object BloomFunctions {
@@ -85,12 +85,6 @@ object BloomFunctions {
     FunctionIdentifier(fnName),
     new ExpressionInfo(classOf[BloomMightContain].getName, fnName),
     (children: Seq[Expression]) => BloomMightContain(children(0), children(1)))
-
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier(fnName)))
-      registry.registerFunction(injection._1, injection._2, injection._3)
-  }
 
   /** Builds a Bloom filter over a LongType column and returns it
     * serialized, ready to embed as the probe's literal. This is one

@@ -1,14 +1,13 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** `SparkSessionExtensions` installer for the engine's native
-  * functions — enable with
-  * `spark.sql.extensions=graft.functions.GraftExtensions` so every
-  * session (including pure-SQL users) gets `vec_dot` without calling
-  * the programmatic registry.
+/** The engine's one install path for its native functions, planner
+  * strategy and optimizer rules. [[graft.core.Session]] sets
+  * `spark.sql.extensions=graft.functions.GraftExtensions` on every
+  * session it builds, so SQL and the Column API resolve the same
+  * functions from construction, and each rule runs once, in the
+  * operator-optimization fixed point.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
@@ -21,17 +20,20 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // optimizer-rule tier: marked interval joins rewrite to binned
     // equi-joins (see graft.plans.BinRangeJoinRule)
     ext.injectOptimizerRule(_ => graft.plans.BinRangeJoinRule)
-    VectorFunctions.injectAll(ext)
-    ext.injectFunction((
-      FunctionIdentifier(HashFunctions.fnName),
-      new ExpressionInfo(classOf[Md5Prefix60].getName, HashFunctions.fnName),
-      (children: Seq[Expression]) => Md5Prefix60(children.head)))
-    ext.injectFunction(TextFunctions.injection)
-    ext.injectFunction(TextFunctions.charInjection)
-    ext.injectFunction(TextFunctions.gramStatsInjection)
-    ext.injectFunction(SetFunctions.injection)
-    ext.injectFunction(TopKFunctions.injection)
-    ext.injectFunction(BloomFunctions.injection)
-    ext.injectFunction(BarrierFunctions.injection)
+    GraftExtensions.functions.foreach(ext.injectFunction)
   }
+}
+
+object GraftExtensions {
+  /** Every native function the engine installs. */
+  val functions: Seq[SparkSessionExtensions#FunctionDescription] =
+    VectorFunctions.injections ++ Seq(
+      HashFunctions.injection,
+      TextFunctions.injection,
+      TextFunctions.charInjection,
+      TextFunctions.gramStatsInjection,
+      SetFunctions.injection,
+      TopKFunctions.injection,
+      BloomFunctions.injection,
+      BarrierFunctions.injection)
 }

@@ -1,6 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -63,13 +62,8 @@ case class Md5Prefix60(child: Expression)
 object HashFunctions {
   val fnName = "md5_60"
 
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier(fnName))) {
-      registry.registerFunction(
-        FunctionIdentifier(fnName),
-        new ExpressionInfo(classOf[Md5Prefix60].getName, fnName),
-        (children: Seq[Expression]) => Md5Prefix60(children.head))
-    }
-  }
+  def injection: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
+    (FunctionIdentifier(fnName),
+      new ExpressionInfo(classOf[Md5Prefix60].getName, fnName),
+      (children: Seq[Expression]) => Md5Prefix60(children.head))
 }

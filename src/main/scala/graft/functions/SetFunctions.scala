@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, ImplicitCastInputTypes}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -96,16 +96,6 @@ object SetFunctions {
         "funcName" -> s"`$fnName`", "paramName" -> "`set`",
         "paramType" -> "\"ARRAY<STRING>\""))
     CountInSet(children(0), children(1))
-  }
-
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier(fnName))) {
-      registry.registerFunction(
-        FunctionIdentifier(fnName),
-        new ExpressionInfo(classOf[CountInSet].getName, fnName),
-        build _)
-    }
   }
 
   def injection: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =

@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, ImplicitCastInputTypes, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -233,15 +233,6 @@ object TextFunctions {
 
   private def buildGramStats(children: Seq[Expression]): Expression =
     buildWith(gramStatsFnName, GramRepStats.apply)(children)
-
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    Seq(injection, charInjection, gramStatsInjection)
-      .foreach { case (id, info, builder) =>
-        if (!registry.functionExists(id))
-          registry.registerFunction(id, info, builder)
-      }
-  }
 
   def injection: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
     (FunctionIdentifier(fnName),

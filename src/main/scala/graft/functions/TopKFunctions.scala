@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, ImplicitCastInputTypes}
@@ -198,7 +198,7 @@ case class TopKBy(ord: Expression, id: Expression, kExpr: Expression,
     copy(ord = newChildren(0), id = newChildren(1), kExpr = newChildren(2))
 }
 
-/** Session registration + Column API for [[TopKBy]], following the
+/** Function injection + Column API for [[TopKBy]], following the
   * [[VectorFunctions]] pattern.
   */
 object TopKFunctions {
@@ -209,12 +209,6 @@ object TopKFunctions {
     new ExpressionInfo(classOf[TopKBy].getName, fnName),
     (children: Seq[Expression]) =>
       TopKBy(children(0), children(1), children(2)))
-
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    if (!registry.functionExists(FunctionIdentifier(fnName)))
-      registry.registerFunction(injection._1, injection._2, injection._3)
-  }
 
   /** Column-API entry: `topkBy(ord, id, k)`. */
   def topkBy(ord: Column, id: Column, k: Column): Column =

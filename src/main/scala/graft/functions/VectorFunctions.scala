@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo, ImplicitCastInputTypes, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -48,7 +48,7 @@ object VectorOps {
   /** Element-wise divide by a scalar — the exact `x / s` op of the
     * HOF lambda it replaces (NOT multiply-by-reciprocal, which differs
     * in the last ulp). Null elements propagate as null, matching the
-    * `transform` lambda: the functions are registered session-wide for
+    * `transform` lambda: the functions are installed session-wide for
     * arbitrary SQL, so a nullable-element array is a legal input even
     * though the in-repo embedding pipelines never produce one (the
     * null scan costs one branch per element on the common path).
@@ -218,7 +218,7 @@ object VectorOps {
   * the generated stage — ~10× less per-pair cost in the kNN joins.
   * A null ELEMENT in either array yields null — the same propagation
   * as the HOF lambda and as vec_div/vec_quant_int8 (the functions are
-  * registered session-wide for arbitrary SQL, so nullable-element
+  * installed session-wide for arbitrary SQL, so nullable-element
   * arrays are legal inputs even though the in-repo embedding pipelines
   * never produce one; the non-null path's check is one branch per
   * element, fused into the multiply loop).
@@ -431,8 +431,8 @@ case class SimHash64(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Session-level registration (the in-process analogue of installing
-  * [[GraftExtensions]] via `spark.sql.extensions`).
+/** Function injections (installed only by [[GraftExtensions]]) and
+  * the Column API over them.
   */
 object VectorFunctions {
   val fnName = "vec_dot"
@@ -442,7 +442,8 @@ object VectorFunctions {
   val encodeName = "pq_encode"
   val simhashName = "simhash64"
 
-  private def injections = Seq(
+  def injections: Seq[(FunctionIdentifier, ExpressionInfo,
+      Seq[Expression] => Expression)] = Seq(
     (FunctionIdentifier(simhashName),
       new ExpressionInfo(classOf[SimHash64].getName, simhashName),
       (children: Seq[Expression]) => SimHash64(children(0), children(1))),
@@ -462,17 +463,6 @@ object VectorFunctions {
       new ExpressionInfo(classOf[PqEncode].getName, encodeName),
       (children: Seq[Expression]) =>
         PqEncode(children(0), children(1), children(2))))
-
-  def register(spark: SparkSession): Unit = {
-    val registry = spark.sessionState.functionRegistry
-    injections.foreach { case (id, info, builder) =>
-      if (!registry.functionExists(id))
-        registry.registerFunction(id, info, builder)
-    }
-  }
-
-  def injectAll(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
-    injections.foreach(ext.injectFunction)
 
   /** Column-API entry: `vecDot(a, b)`. */
   def vecDot(a: Column, b: Column): Column = call_function(fnName, a, b)

@@ -80,8 +80,6 @@ object Curation {
     md5(lower(trim(regexp_replace(col("text"), "\\s+", " "))))
 
   def curateOf(docs: DataFrame): DataFrame = {
-    graft.functions.SetFunctions.register(docs.sparkSession)
-    graft.functions.BarrierFunctions.register(docs.sparkSession)
     // eval_once on the tokenized column: without the barrier,
     // predicate pushdown substitutes the keep condition's quality /
     // n_tokens / pred_lang aliases and re-derives the ENTIRE
@@ -116,7 +114,6 @@ object Curation {
     * trimmed text as the single gram for docs under `n` tokens.
     */
   private def wordGramTable(docs: DataFrame, n: Int): DataFrame = {
-    graft.functions.TextFunctions.register(docs.sparkSession)
     val t = split(col("txt"), "\\s+")
     val sz = size(t)
     docs
@@ -153,7 +150,6 @@ object Curation {
     */
   def decontaminateAgainst(corpus: DataFrame, bench: DataFrame, n: Int = 8,
       minShared: Long = 5L, excludeSelf: Boolean = false): DataFrame = {
-    graft.functions.HashFunctions.register(corpus.sparkSession)
     // join on the 60-bit content hash of each gram, not the gram
     // string: an 8-gram averages ~60 bytes while its hash is 8 — the
     // broadcast (or any shuffle fallback) shrinks ~8×, raising the
@@ -231,9 +227,6 @@ object Curation {
   private[graft] def decontaminateBloomPlan(corpus: DataFrame,
       bench: DataFrame, n: Int, minShared: Long, excludeSelf: Boolean,
       fpp: Double, persist: Boolean): (DataFrame, DataFrame) = {
-    val s = corpus.sparkSession
-    graft.functions.HashFunctions.register(s)
-    graft.functions.BloomFunctions.register(s)
     // persisted: the filter build and the join both read it, and it is
     // small by the operator's contract (benchmarks vs a corpus)
     val benchGrams0 = wordGramTable(bench, n)
@@ -388,7 +381,6 @@ object Curation {
     */
   def weightedSampleOf(docs: DataFrame, alpha: Double = 0.7,
       denom: Int = 10000): DataFrame = {
-    graft.functions.HashFunctions.register(docs.sparkSession)
     val w = mixWeightsOf(docs, alpha).select(col("source"), col("weight"))
     docs
       .select(col("doc_id"), col("source"))
@@ -422,7 +414,6 @@ object Curation {
   def sourceEpochsOf(docs: DataFrame, alpha: Double = 0.7,
       denom: Int = 10000): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    graft.functions.HashFunctions.register(docs.sparkSession)
     val w = mixWeightsOf(docs, alpha)
       .withColumn("total_chars", sum(col("n_chars")).over(Window.partitionBy()))
       .select(col("source"),
@@ -600,7 +591,6 @@ object Curation {
     */
   def curateFullStaged(s: SparkSession, dir: String, budget: Long,
       boundary: (String, DataFrame) => DataFrame): DataFrame = {
-    graft.functions.SetFunctions.register(s)
     val docs = Tables.load(s, dir, "documents")
     val repViolators = TextAnalysis.repetitionStatsOf(docs)
       .filter((col("n") === 2 && col("top_share") > MaxTopShare2) ||
@@ -614,7 +604,6 @@ object Curation {
     // the winner election, so it must be applied AFTER rk = 1 — the
     // same set the old two-semi-join form produced, now with one scan
     // and one join fewer; the c8/c19 oracles hash-pin the equality).
-    graft.functions.BarrierFunctions.register(s)
     // eval_once barrier on the tokenized column — same §4.4 fix as
     // curateOf: keeps the keep-condition filter from re-deriving the
     // whole score chain from raw text in a duplicated Filter copy
@@ -804,7 +793,6 @@ object Curation {
     * compared surface reproducible cross-engine.
     */
   def dsirWeights(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.HashFunctions.register(s)
     dsirWeightsOf(Tables.load(s, dir, "documents"), lit("en"))
   }
 
@@ -882,7 +870,6 @@ object Curation {
     */
   def writeDsirModel(s: SparkSession, dir: String,
       modelPath: String): Unit = {
-    graft.functions.HashFunctions.register(s)
     val tk = dsirBucketTokens(Tables.load(s, dir, "documents"))
     val (lr, meta) = dsirRatioTables(tk, lit("en"))
     lr.write.mode("overwrite").parquet(s"$modelPath/ratios")
@@ -896,7 +883,6 @@ object Curation {
     */
   def dsirScoreFromModel(s: SparkSession, modelPath: String,
       docs: DataFrame): DataFrame = {
-    graft.functions.HashFunctions.register(s)
     dsirScoreWith(dsirBucketTokens(docs),
       s.read.parquet(s"$modelPath/ratios"),
       s.read.parquet(s"$modelPath/meta"))
@@ -1060,7 +1046,6 @@ object Curation {
     * philosophy as c7's weighted sample and q48/q49.
     */
   def shuffleShards(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.HashFunctions.register(s)
     val key = graft.llm.TextAnalysis.hash60(
       concat(lit(ShuffleSeed), lit(":"), col("doc_id").cast("string")))
     val w = Window.partitionBy("shard").orderBy("key", "doc_id")

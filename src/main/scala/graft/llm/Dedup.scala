@@ -90,8 +90,6 @@ object Dedup {
     // HOF forms: per-element element_at re-runs the regex split per
     // token — CollapseProject inlines it — and even the zip-slices
     // transform pays an interpreted lambda per shingle.)
-    val s = docs.sparkSession
-    graft.functions.TextFunctions.register(s)
     val t = split(col("txt"), "\\s+")
     val n = size(t)
     spreadIfNarrow(docs)
@@ -124,7 +122,6 @@ object Dedup {
     * shingle count is per-character, not per-word.
     */
   def signaturesFrom(shingles: DataFrame, sampleMod: Int = 1): DataFrame = {
-    graft.functions.HashFunctions.register(shingles.sparkSession)
     signaturesFromHashed(
       shingles
         .select(col("doc_id"), explode(col("shingles")).as("sh"))
@@ -160,8 +157,6 @@ object Dedup {
     * word form's fallback.
     */
   def charShingleHashesOf(docs: DataFrame, k: Int = 5): DataFrame = {
-    val s = docs.sparkSession
-    graft.functions.HashFunctions.register(s)
     spreadIfNarrow(docs)
       .select(col("doc_id"),
         lower(trim(regexp_replace(col("text"), "\\s+", " "))).as("txt"))
@@ -360,7 +355,6 @@ object Dedup {
     * exact code path the persisted index was built with.
     */
   def hsetsOf(docs: DataFrame): DataFrame = {
-    graft.functions.HashFunctions.register(docs.sparkSession)
     shingleSetsOf(docs).select(col("doc_id"),
       array_sort(array_distinct(
         transform(col("shingles"), sh => hash60(sh) % M))).as("hset"))
@@ -484,8 +478,6 @@ object Dedup {
     * whole map side stays in codegen.
     */
   def simhashOf(docs: DataFrame): DataFrame = {
-    val s = docs.sparkSession
-    graft.functions.HashFunctions.register(s)
     val toks = spreadIfNarrow(docs)
       .select(col("doc_id"),
         explode(TextAnalysis.tokens(col("text"))).as("tok"))
@@ -662,8 +654,6 @@ object Dedup {
     * corpus.
     */
   private[graft] def setSimCandidatesOf(sh: DataFrame, t: Double): DataFrame = {
-    val s = sh.sparkSession
-    graft.functions.HashFunctions.register(s)
     import org.apache.spark.sql.expressions.Window
     // distinct hashed tokens per doc (shingle sets are already
     // distinct; hashing cannot split tokens, only — astronomically
@@ -1134,7 +1124,6 @@ object Dedup {
     * near-dups that survive any threshold.
     */
   def splitLeakfree(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.HashFunctions.register(s)
     val cl = dedupClusters(s, dir).select(col("doc_id"), col("cluster_id"))
     val h = graft.llm.TextAnalysis.hash60(concat(lit("split:"),
       col("cluster_id").cast("string"))) % 10
@@ -1208,7 +1197,6 @@ object Dedup {
     */
   def splitLeakfreeIndexed(s: SparkSession, dir: String,
       table: String): DataFrame = {
-    graft.functions.HashFunctions.register(s)
     val cl = s.table(table).select(col("doc_id"), col("cluster_id"))
     val h = graft.llm.TextAnalysis.hash60(concat(lit("split:"),
       col("cluster_id").cast("string"))) % 10
@@ -1295,7 +1283,6 @@ object Dedup {
   }
 
   def dupSpans(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.HashFunctions.register(s)
     dupSpanIslands(spanToks(s, dir))
       .select(col("doc_id"), col("span_start"), col("span_end"),
         (col("span_end") - col("span_start") + 1).as("span_tokens"),
@@ -1324,7 +1311,6 @@ object Dedup {
     * repeated run), no skew.
     */
   def spanDedupApply(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.HashFunctions.register(s)
     val toks = spanToks(s, dir)
     val spans = dupSpanIslands(toks).drop("n_dup_grams")
     val content = spans.join(toks, "doc_id")
@@ -1464,8 +1450,6 @@ object Dedup {
     * layout instead of scanning.
     */
   def apssCosine(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.HashFunctions.register(s)
-    graft.functions.VectorFunctions.register(s)
     val docs = Tables.load(s, dir, "documents")
       .select(col("doc_id"),
         split(lower(trim(col("text"))), "\\s+").as("t"))
@@ -1656,7 +1640,6 @@ object Dedup {
     */
   def writeApssIndex(s: SparkSession, dir: String, table: String,
       buckets: Int = 8): Unit = {
-    graft.functions.HashFunctions.register(s)
     val docs = Tables.load(s, dir, "documents")
       .select(col("doc_id"),
         split(lower(trim(col("text"))), "\\s+").as("t"))
@@ -1682,8 +1665,6 @@ object Dedup {
     * `apss-sketch-join`). Spec-pinned ≡ the inline d16.
     */
   def apssApproxFromIndex(s: SparkSession, table: String): DataFrame = {
-    graft.functions.HashFunctions.register(s)
-    graft.functions.VectorFunctions.register(s)
     val state = s.table(table).localCheckpoint(true)
     val cand = apssSketchCandidates(state)
     val vocab = state.agg(countDistinct(col("th"))).head().getLong(0)
@@ -1760,8 +1741,6 @@ object Dedup {
     * pinned by measurement in LanguageModelSpec.
     */
   def apssApprox(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.HashFunctions.register(s)
-    graft.functions.VectorFunctions.register(s)
     val docs = Tables.load(s, dir, "documents")
       .select(col("doc_id"),
         split(lower(trim(col("text"))), "\\s+").as("t"))

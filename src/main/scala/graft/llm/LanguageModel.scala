@@ -67,7 +67,6 @@ object LanguageModel {
 
   /** The 80% train split — deterministic under any partitioning. */
   private def trainSplit(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.HashFunctions.register(s)
     docsTok(s, dir).filter(
       TextAnalysis.hash60(concat(lit("lm:"), col("doc_id").cast("string")))
         % 10 < 8)

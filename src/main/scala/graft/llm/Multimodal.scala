@@ -414,7 +414,6 @@ object Multimodal {
     */
   def mediaPhashOf(media: Dataset[MediaRow]): DataFrame = {
     val sp = media.sparkSession
-    graft.functions.HashFunctions.register(sp)
     import sp.implicits._
     val scanned = media.mapPartitions(_.map { r =>
       val ph = tryPixelAHash(r)

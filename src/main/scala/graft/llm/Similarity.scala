@@ -55,7 +55,6 @@ object Similarity {
     * frame — the entry point ingest paths use for NEW vectors.
     */
   private[llm] def embOf(df: DataFrame): DataFrame = {
-    graft.functions.VectorFunctions.register(df.sparkSession)
     df.select(col("vec_id"), col("label"),
         col("embedding").cast("array<double>").as("v"))
       .withColumn("nrm", sqrt(dot(col("v"), col("v"))))
@@ -78,7 +77,6 @@ object Similarity {
     * rank window), the shape that survives 100 TB (VERDICT r14 #2).
     */
   private def finalTopK(scored: DataFrame, topK: Int): DataFrame = {
-    graft.functions.TopKFunctions.register(scored.sparkSession)
     scored.groupBy("q_id")
       .agg(graft.functions.TopKFunctions
         .topkBy(col("sim"), col("vec_id"), lit(topK)).as("tk"))
@@ -174,7 +172,6 @@ object Similarity {
     * partition column composes for free.
     */
   def knnFilteredLsh(s: SparkSession, dir: String, topK: Int = 3): DataFrame = {
-    graft.functions.TopKFunctions.register(s)
     val e = emb(s, dir).withColumn("sig", lshSig(col("v")))
       .withColumn("sig2", lshSig2(col("v")))
     val topC = filteredBudget(e)
@@ -219,7 +216,6 @@ object Similarity {
     * SQL verbatim.
     */
   def knnBruteTopK(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.TopKFunctions.register(s)
     val e = emb(s, dir)
     val q = e.filter(col("vec_id") < 20)
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
@@ -344,7 +340,6 @@ object Similarity {
     */
   private def probeCells(assigned: DataFrame, centDf: DataFrame,
       nprobe: Int, topK: Int): DataFrame = {
-    graft.functions.TopKFunctions.register(assigned.sparkSession)
     val q = assigned.filter(col("vec_id") < 20)
       .select(col("vec_id").as("q_id"), col("v").as("qv"), col("nrm").as("qn"))
     // nearest-nprobe centroids per normalized query:
@@ -473,7 +468,6 @@ object Similarity {
     */
   def knnIvfFromIndex(s: SparkSession, indexDir: String, nprobe: Int = 12,
       topK: Int = 5): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val assigned = s.read.parquet(s"$indexDir/cells")
     val centDf = s.read.parquet(s"$indexDir/centroids")
       .withColumn("cc", dot(col("cv"), col("cv")))
@@ -593,8 +587,6 @@ object Similarity {
     */
   private def pqAdcSearch(codes: DataFrame, cb: DataFrame, q: DataFrame,
       topK: Int, m: Int = PqM, k: Int = PqK): DataFrame = {
-    val s = codes.sparkSession
-    graft.functions.TopKFunctions.register(s)
     codes
       .crossJoin(broadcast(pqDistTable(q, cb, m, k)))
       .filter(col("vec_id") =!= col("q_id"))
@@ -717,7 +709,6 @@ object Similarity {
     * at both sf0.01 and sf0.1 — floor-gated in the bench artifact.
     */
   def knnPqInline(s: SparkSession, dir: String, topK: Int = 5): DataFrame = {
-    graft.functions.TopKFunctions.register(s)
     val unit = unitVecs(s, dir)
     val samples = pqSampleUnits(unit)
     val codes = unit.select(col("vec_id"),
@@ -881,7 +872,6 @@ object Similarity {
     */
   private[graft] def ivfPqAssign(unit: DataFrame, cells: DataFrame,
       assign: Int = 1): DataFrame = {
-    graft.functions.TopKFunctions.register(unit.sparkSession)
     unit.crossJoin(cells)
       .select(col("vec_id"), col("uv"), col("cell"),
         dot(col("uv"), col("ccv")).as("cd"))
@@ -903,7 +893,6 @@ object Similarity {
     */
   private[graft] def ivfPqProbesOf(q: DataFrame, cells: DataFrame,
       nprobe: Int): DataFrame = {
-    graft.functions.TopKFunctions.register(q.sparkSession)
     q.crossJoin(cells)
       .select(col("q_id"), col("cell"), dot(col("quv"), col("ccv")).as("qcd"))
       .groupBy("q_id")
@@ -923,7 +912,6 @@ object Similarity {
       nprobe: Int, topK: Int, assign: Int = IvfPqAssign,
       rerank: Int = IvfPqRerank): DataFrame = {
     val s = unit.sparkSession
-    graft.functions.TopKFunctions.register(s)
     val cells = coarseCellsOf(unit, cellIds)
     val samples = pqSampleUnits(unit)
     val assigned = ivfPqAssign(unit, cells, assign)
@@ -1085,8 +1073,6 @@ object Similarity {
   def knnIvfPqFromIndex(s: SparkSession, dir: String, indexDir: String,
       nprobe: Int = 4, topK: Int = 5,
       rerank: Int = IvfPqRerank): DataFrame = {
-    graft.functions.TopKFunctions.register(s)
-    graft.functions.VectorFunctions.register(s)
     val unit = unitVecs(s, dir)
     val q = unit.filter(col("vec_id") < 20)
       .select(col("vec_id").as("q_id"), col("uv").as("quv"))
@@ -1243,8 +1229,6 @@ object Similarity {
     * cheaper than the 64-dim dot product).
     */
   private def hammingRerank(e: DataFrame, topC: Int, topK: Int): DataFrame = {
-    val s = e.sparkSession
-    graft.functions.TopKFunctions.register(s)
     val q = e.filter(col("vec_id") < 20)
       .select(col("vec_id").as("q_id"), col("sig").as("q_sig"),
         col("sig2").as("q_sig2"), col("v").as("qv"), col("nrm").as("qn"))
@@ -1327,7 +1311,6 @@ object Similarity {
     * budget) — oracle-checked end to end.
     */
   def knnJl(s: SparkSession, dir: String, topK: Int = 3): DataFrame = {
-    graft.functions.TopKFunctions.register(s)
     val e = emb(s, dir).withColumn("rv", jlReduce(col("v")))
       .withColumn("rn", sqrt(dot(col("rv"), col("rv"))))
     val topC = math.max(topK,
@@ -1513,7 +1496,6 @@ object Similarity {
     * this runs at write time next to the cell-id column.
     */
   def quantizeInt8(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val e = Tables.load(s, dir, "embeddings")
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     // |max| without a lambda: max(|x|) = max(max(x), -min(x)) — both
@@ -1536,7 +1518,6 @@ object Similarity {
     * payload is [[quantizeInt8]]'s 1-byte/dim format).
     */
   private def dequantized(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VectorFunctions.register(s)
     val e = Dedup.spreadIfNarrow(Tables.load(s, dir, "embeddings"))
       .select(col("vec_id"), col("label"),
         col("embedding").cast("array<double>").as("v"))
@@ -1617,7 +1598,6 @@ object Similarity {
     * and the same two-term reciprocal sum.
     */
   def hybridRrf(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.TopKFunctions.register(s)
     val k = RrfDepth
     // rank the ≤ k BM25 rows through the same bounded heap as the
     // vector side (VERDICT r15 #6): the global row_number window this
@@ -1691,14 +1671,13 @@ object Similarity {
     // bounded heap instead of the q_id rank window (VERDICT r15 #2/#6):
     // the banded negative stream partial-aggregates to ≤ k rows per
     // (task, query) before any exchange; (sim desc, vec_id asc) order
-    // and ties are pinned identical to the row_number form, max_pos is
-    // constant per q_id (first() is deterministic)
-    graft.functions.TopKFunctions.register(s)
+    // and ties are pinned identical to the row_number form; max_pos is
+    // constant per q_id, so max() carries it order-insensitively
     scored.filter(col("label") =!= col("q_label"))
       .join(broadcast(posCeil), "q_id")
       .filter(col("sim") < col("max_pos"))
       .groupBy("q_id")
-      .agg(first(col("max_pos")).as("max_pos"),
+      .agg(max(col("max_pos")).as("max_pos"),
         graft.functions.TopKFunctions
           .topkBy(col("sim"), col("vec_id"), lit(HardNegK)).as("tk"))
       .select(col("q_id"), col("max_pos"), posexplode(col("tk")))
@@ -1892,7 +1871,6 @@ object Similarity {
     * bench artifact.
     */
   def filteredRecallAt(s: SparkSession, dir: String, m: Int): Double = {
-    graft.functions.TopKFunctions.register(s)
     val e = emb(s, dir).withColumn("sig", lshSig(col("v")))
       .withColumn("sig2", lshSig2(col("v")))
     val q = e.filter(col("vec_id") < 20)
@@ -1985,7 +1963,6 @@ object Similarity {
     * 256-key bucket exchange of (bucket, vec_id) pairs.
     */
   def bucketCapSample(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.TopKFunctions.register(s)
     emb(s, dir)
       .select(lshBucket(col("v")).as("bucket"), col("vec_id"))
       .groupBy("bucket")

@@ -33,10 +33,9 @@ object TextAnalysis {
     *
     * Backed by the native [[graft.functions.Md5Prefix60]] codegen
     * Expression (digest bytes → long, no hex-string intermediate) —
-    * the hot path of every MinHash/SimHash query. Callers that build
-    * plans outside a [[graft.core.Session]] must call
-    * `HashFunctions.register(spark)` first (query entry points here
-    * and in [[Dedup]] do).
+    * the hot path of every MinHash/SimHash query. `md5_60` resolves
+    * in any session built by [[graft.core.Session]], which installs
+    * [[graft.functions.GraftExtensions]].
     */
   def hash60(c: Column): Column =
     call_function(graft.functions.HashFunctions.fnName, c)
@@ -78,7 +77,6 @@ object TextAnalysis {
     Seq("the", "a", "of", "and", "in", "to", "is", "on", "for", "with")
 
   def qualityScore(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.SetFunctions.register(s)
     val tk = tokens(col("text"))
     Tables.load(s, dir, "documents")
       .select(col("doc_id"), tk.as("t"))
@@ -181,7 +179,6 @@ object TextAnalysis {
     // digit: n_grams = Σc, top_share = round(max c / Σc, 4), dup_frac
     // = round(Σ{c>1} c / Σc, 4); docs shorter than n still contribute
     // no row (the size filter mirrors the explode form's behavior).
-    graft.functions.TextFunctions.register(docs.sparkSession)
     docs
       .select(col("doc_id"), split(trim(col("text")), "\\s+").as("t"))
       .select(col("doc_id"), col("t"),
@@ -249,7 +246,6 @@ object TextAnalysis {
     "zh" -> Seq("zh", "sh", "ng", "xi", "qi", "ao"))
 
   def langIdNgram(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.TextFunctions.register(s)
     // native char_ngrams kernel: one codegen loop per doc — the SQL
     // lambda form it replaces interpreted one call per CHARACTER of
     // the corpus, the densest element count of any text path
@@ -274,7 +270,6 @@ object TextAnalysis {
     * what a 100 TB dedup shuffle would key on (8 bytes vs 32).
     */
   def fingerprint(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.HashFunctions.register(s)
     val norm = lower(trim(regexp_replace(col("text"), "\\s+", " ")))
     // Karp-Rabin rolling hash folded over per-token hashes
     // (base 31 mod 2^31-1) — the incremental form a streaming
@@ -353,7 +348,6 @@ object TextAnalysis {
     */
   def cmsHeavyHitters(s: SparkSession, dir: String): DataFrame = {
     import graft.functions.CmsAggregator
-    graft.functions.HashFunctions.register(s)
     val occ = Tables.load(s, dir, "documents")
       .select(explode(tokens(lower(col("text")))).as("token"))
     val sk = occ.select(
@@ -382,15 +376,12 @@ object TextAnalysis {
     * bigram stream is a narrow map over the scan.
     */
   private def bigramHashes(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.HashFunctions.register(s)
     bigramHashesOf(Tables.load(s, dir, "documents"))
   }
 
   /** The same sharded bigram hash stream over an arbitrary (doc_id,
     * text) frame — the streaming KMV twin feeds micro-batches through
     * this so batch and continuous sketches see identical elements.
-    * Callers outside a query entry point must register HashFunctions
-    * first.
     */
   private[graft] def bigramHashesOf(docs: DataFrame): DataFrame =
     docs

@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{And, Ascending, Attribute, AttributeSet, Expression, GenericInternalRow, JoinedRow, RowOrdering, SortOrder, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, Filter, LogicalPlan}
@@ -12,8 +12,8 @@ import org.apache.spark.sql.execution.{BinaryExecNode, SparkPlan, SparkStrategy}
 /** Native as-of join — the whole-operator tier of SURVEY §4.3's
   * extension ladder: a custom `LogicalPlan` node, a `SparkStrategy`
   * that plans it, and a sort-merge `SparkPlan` that executes it,
-  * registered per-session (`AsOfJoinApi.register`) or fleet-wide via
-  * `spark.sql.extensions=graft.functions.GraftExtensions`.
+  * installed by `spark.sql.extensions=graft.functions.GraftExtensions`,
+  * which every `graft.core.Session` sets.
   *
   * Semantics: for every left row, append one right row of the same
   * key — backward (the default, the standard form): the row with the
@@ -254,24 +254,6 @@ case class AsOfJoinExec(leftKey: Expression, rightKey: Expression,
   */
 object AsOfJoinApi {
 
-  /** Adds [[AsOfJoinStrategy]] to the session's extra strategies
-    * (idempotent) — the programmatic analogue of installing
-    * [[graft.functions.GraftExtensions]] via `spark.sql.extensions`.
-    */
-  def register(spark: SparkSession): Unit = {
-    val cur = spark.experimental.extraStrategies
-    if (!cur.contains(AsOfJoinStrategy))
-      spark.experimental.extraStrategies = cur :+ AsOfJoinStrategy
-    // the pushdown rule runs as a late optimizer batch here; filters
-    // it moves still reach the parquet scan because FileSourceStrategy
-    // extracts PushedFilters from any Filter adjacent to the relation
-    // at PLANNING time (the extensions path instead injects into the
-    // operator-optimization fixed point)
-    val opts = spark.experimental.extraOptimizations
-    if (!opts.contains(PushFilterThroughAsOfJoin))
-      spark.experimental.extraOptimizations = opts :+ PushFilterThroughAsOfJoin
-  }
-
   /** `joinType`: "left" (default — unmatched left rows null-padded) or
     * "inner" (unmatched left rows dropped, DuckDB `ASOF JOIN` default).
     * `direction`: "backward" (default — greatest rightTime <= leftTime,
@@ -295,7 +277,6 @@ object AsOfJoinApi {
         s"asofJoin: direction must be 'backward' or 'forward', got '$other'")
     }
     val spark = leftDf.sparkSession
-    register(spark)
     val lPlan = GraftSqlBridge.logicalPlan(leftDf)
     val rPlan = GraftSqlBridge.logicalPlan(rightDf)
     def resolve(plan: LogicalPlan, name: String): Attribute =

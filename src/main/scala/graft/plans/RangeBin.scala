@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, Cast, Divide, EqualTo, Explode, Expression, Floor, GreaterThan, GreaterThanOrEqual, LessThan, LessThanOrEqual, Literal, Sequence}
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, Generate, Join, LogicalPlan, Project, SubqueryAlias, UnaryNode}
@@ -154,16 +154,6 @@ object BinRangeJoinRule extends Rule[LogicalPlan] {
 /** API surface for the rule. */
 object RangeJoinApi {
 
-  /** Registers [[BinRangeJoinRule]] on the session (idempotent) — the
-    * programmatic analogue of installing
-    * [[graft.functions.GraftExtensions]] via `spark.sql.extensions`.
-    */
-  def register(spark: SparkSession): Unit = {
-    val opts = spark.experimental.extraOptimizations
-    if (!opts.contains(BinRangeJoinRule))
-      spark.experimental.extraOptimizations = opts :+ BinRangeJoinRule
-  }
-
   /** Marks `intervals` as the replicable side of a range join with
     * the given bin width. The marker is advisory for join SHAPE:
     * joins the rule can't bin (extra conjuncts, non-numeric bounds,
@@ -177,9 +167,7 @@ object RangeJoinApi {
     * domain's observed max) before marking.
     */
   def markBinned(intervals: DataFrame, width: Double): DataFrame = {
-    val s = intervals.sparkSession
-    register(s)
-    GraftSqlBridge.ofRows(s,
+    GraftSqlBridge.ofRows(intervals.sparkSession,
       RangeBinHint(width, GraftSqlBridge.logicalPlan(intervals)))
   }
 }

@@ -226,7 +226,6 @@ object Extended {
     * the relational face of the s9 demonstration.
     */
   def q44TopkHeap(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.TopKFunctions.register(s)
     t(s, dir, "orders")
       .groupBy("o_orderstatus")
       .agg(graft.functions.TopKFunctions
@@ -349,7 +348,6 @@ object Extended {
     * oracle) — the filter is pure shuffle-volume savings.
     */
   def q73BloomJoin(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.BloomFunctions.register(s)
     val dim = t(s, dir, "customer")
       .filter(col("c_mktsegment") === "BUILDING")
       .select(col("c_custkey"))
@@ -1222,8 +1220,6 @@ object Extended {
     * window shuffle.
     */
   def q64BottomkSample(s: SparkSession, dir: String, k: Int = 10): DataFrame = {
-    graft.functions.HashFunctions.register(s)
-    graft.functions.TopKFunctions.register(s)
     val hv = graft.llm.TextAnalysis.hash60(concat(lit("q64:"),
       col("o_orderkey").cast("string"))) % (1L << 50)
     val orders = t(s, dir, "orders")
@@ -1542,7 +1538,6 @@ object Extended {
     * no shuffle, no state, pushdown-friendly surrounding columns.
     */
   def q48HashSample(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.HashFunctions.register(s)
     t(s, dir, "lineitem")
       .filter(graft.llm.TextAnalysis.hash60(concat(lit("q48:"),
         col("l_orderkey").cast("string"), lit(":"),
@@ -1559,7 +1554,6 @@ object Extended {
     * a scan-side filter, no shuffle, no per-stratum pass.
     */
   def q49StratifiedHash(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.HashFunctions.register(s)
     // integer bucket thresholds (of 10000), not rate * denom: a
     // fractional rate in DOUBLE (0.10 * 10000 = 1000.0000000000001)
     // would disagree with an exact-decimal engine on boundary hashes
@@ -1644,7 +1638,6 @@ object Extended {
     * engine-portable; doc_id makes the order total.
     */
   def q76WeightedSample(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.HashFunctions.register(s)
     val w = greatest(length(col("text")).cast(LongType), lit(1L))
     val u = (graft.llm.TextAnalysis.hash60(concat(lit("q76:"),
       col("doc_id").cast("string"))) % 1000000 + 1) / lit(1000001.0)

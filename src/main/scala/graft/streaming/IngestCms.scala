@@ -83,7 +83,6 @@ object IngestCms {
     */
   def estimates(spark: SparkSession, sketchPath: String,
       tokens: DataFrame): DataFrame = {
-    graft.functions.HashFunctions.register(spark)
     val grid = readSketch(spark, sketchPath)
     val g = typedLit(grid.toSeq)
     val est = (0 until CmsAggregator.Depth).map { r =>

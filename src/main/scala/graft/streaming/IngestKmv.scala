@@ -50,7 +50,6 @@ object IngestKmv {
     */
   def processBatch(batch: DataFrame, batchId: Long,
       sketchPath: String): Unit = {
-    graft.functions.HashFunctions.register(batch.sparkSession)
     val sk = graft.llm.TextAnalysis.bigramHashesOf(batch)
       .agg(udaf(KmvAggregator, org.apache.spark.sql.Encoders.scalaLong)
         .apply(col("h")).as("sk"))

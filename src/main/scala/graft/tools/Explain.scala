@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Offline plan-audit tool: prints the formatted physical plan of the
   * named `SparkEntry.queries` entries (all of them with no args) so
   * shuffle/broadcast/codegen shapes can be reviewed without editing a
@@ -10,10 +8,7 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.core.Session.local()
     spark.sparkContext.setLogLevel("ERROR")
     val names =
       if (args.nonEmpty) args.toSeq else graft.SparkEntry.queries.keys.toSeq.sorted

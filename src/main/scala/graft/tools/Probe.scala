@@ -10,19 +10,10 @@ object Probe {
   def main(args: Array[String]): Unit = {
     val (sfDir, name) = (args(0), args(1))
     val runs = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.core.Session.local()
     spark.sparkContext.setLogLevel("WARN")
     // internal probe targets beyond the public query map
     def state(s: SparkSession, d: String) = {
-      graft.functions.HashFunctions.register(s)
-      graft.functions.VectorFunctions.register(s)
       graft.llm.Dedup.apssState(graft.core.Tables.load(s, d, "documents")
         .select(org.apache.spark.sql.functions.col("doc_id"),
           org.apache.spark.sql.functions.split(
@@ -34,7 +25,6 @@ object Probe {
       // c1 stage split (r16): the scored projection alone vs +filter
       "c1_scored" -> ((s, d) => {
         import org.apache.spark.sql.functions._
-        graft.functions.SetFunctions.register(s)
         graft.llm.Dedup.spreadIfNarrow(
             graft.core.Tables.load(s, d, "documents"))
           .select(col("doc_id"), col("lang"),

@@ -3,7 +3,7 @@ package graft.tools
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.Tables
+import graft.core.{Session, Tables}
 
 /** sf1 scaling soak (VERDICT r12 ask #8): turns the "plans you'd want
   * at 100×" argument from plan-shape pins into a MEASURED scaling
@@ -115,15 +115,8 @@ object ScaleSoak {
     val factor = if (args.length > 2) args(2).toInt else 10
     val regex = if (args.length > 3) args(3)
       else DefaultHeavy.mkString("^(", "|", ")$")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
+    val cpus = Session.cpus
+    val spark = Session.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     buildCorpus(spark, baseDir, outDir, factor)

@@ -109,7 +109,6 @@ class AnalyticsSpec extends SparkSpec {
 
   test("q76: the top-k is the exact driver-side replay of the A-ES keys, " +
       "and repeated runs agree") {
-    graft.functions.HashFunctions.register(spark)
     val docs = graft.core.Tables.load(spark, sfDir, "documents")
       .filter(col("text").isNotNull)
       .select(col("doc_id"),

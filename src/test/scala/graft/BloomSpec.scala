@@ -12,7 +12,6 @@ class BloomSpec extends SparkSpec {
 
   test("no false negatives: every inserted key probes true") {
     import spark.implicits._
-    BloomFunctions.register(spark)
     val keys = (0L until 10000L).map(i => i * 2654435761L)
     val bits = BloomFunctions.buildSerialized(
       keys.toDF("h"), "h", keys.size.toLong, fpp = 0.03)
@@ -24,7 +23,6 @@ class BloomSpec extends SparkSpec {
 
   test("a disjoint probe set is mostly rejected (fpp honored loosely)") {
     import spark.implicits._
-    BloomFunctions.register(spark)
     val keys = (0L until 10000L).map(i => i * 2654435761L)
     val bits = BloomFunctions.buildSerialized(
       keys.toDF("h"), "h", keys.size.toLong, fpp = 0.01)
@@ -37,7 +35,6 @@ class BloomSpec extends SparkSpec {
 
   test("null hash rows are dropped by the probe, like a join null key") {
     import spark.implicits._
-    BloomFunctions.register(spark)
     val bits = BloomFunctions.buildSerialized(
       Seq(1L, 2L).toDF("h"), "h", 2L, fpp = 0.01)
     val rows = Seq[(java.lang.Long, String)]((1L, "a"), (null, "b"))

@@ -74,7 +74,6 @@ class CurationModelSpec extends SparkSpec {
       (20 until 40).map(i =>
         (i.toLong, "de", s"zeta eta theta iota tok$i"))).toDF(
       "doc_id", "lang", "text")
-    graft.functions.HashFunctions.register(spark)
     val imps = graft.llm.Curation.dsirWeightsOf(synth, lit("en"))
       .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
     val minTgt = (0 until 20).map(i => imps(i.toLong)).min

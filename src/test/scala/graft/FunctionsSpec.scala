@@ -1,21 +1,31 @@
 package graft
 
-/** Native-function surface: `vec_dot` must be available from session
-  * construction via the `spark.sql.extensions` installer (no
-  * programmatic register call) and agree between SQL and Column use.
+/** Native-function surface: every function must be available from
+  * session construction via the `spark.sql.extensions` installer (the
+  * engine's only install path) and agree between SQL and Column use.
   */
 class FunctionsSpec extends SparkSpec {
 
   test("vec_dot is installed by GraftExtensions at session build time") {
     // TestSession is built by core.Session.builder, which sets
-    // spark.sql.extensions — pure SQL resolves the function without
-    // any VectorFunctions.register call in this suite.
+    // spark.sql.extensions — pure SQL resolves every engine function
+    // with nothing else installing them.
     assert(spark.conf.get("spark.sql.extensions")
       == "graft.functions.GraftExtensions")
     val r = spark.sql(
       "SELECT vec_dot(array(1.0D, 2.0D, 3.0D), array(4.0D, 5.0D, 6.0D)) AS d")
       .head.getDouble(0)
     assert(r == 32.0)
+    val names = graft.functions.GraftExtensions.functions.map(_._1.funcName)
+    assert(names.size == names.distinct.size)
+    names.foreach(n => assert(spark.catalog.functionExists(n), n))
+    // the as-of strategy and the range-bin rule come from the
+    // extensions alone: running both query shapes adds nothing to the
+    // session's programmatic strategy and optimizer lists
+    Seq("q42_asof_native", "q43_range_join_binned").foreach(q =>
+      assert(SparkEntry.queries(q)(spark, sfDir).count() > 0, q))
+    assert(spark.experimental.extraStrategies.isEmpty)
+    assert(spark.experimental.extraOptimizations.isEmpty)
   }
 
   test("md5_60 equals the conv(substring(md5)) form it replaces") {
@@ -59,7 +69,6 @@ class FunctionsSpec extends SparkSpec {
   test("word_ngrams rejects bad arguments with proper analysis errors") {
     import org.apache.spark.sql.AnalysisException
     import spark.implicits._
-    graft.functions.TextFunctions.register(spark)
     val df = Seq(Seq("a", "b", "c")).toDF("arr")
     df.createOrReplaceTempView("wn_args")
     def err(sql: String): AnalysisException =
@@ -172,7 +181,6 @@ class FunctionsSpec extends SparkSpec {
 
   test("pq_adc sums table lookups; malformed inputs yield null, not wrong sums") {
     import spark.implicits._
-    graft.functions.VectorFunctions.register(spark)
     // m=2, k=3: dt = [10,20,30 | 40,50,60]; codes (1,2) -> 20 + 60
     val ok = spark.sql(
       """SELECT pq_adc(array(1, 2),
@@ -199,7 +207,6 @@ class FunctionsSpec extends SparkSpec {
   test("pq_encode picks the min-L2 centroid per subspace, ties to the " +
       "smallest code; malformed geometry yields null") {
     import spark.implicits._
-    graft.functions.VectorFunctions.register(spark)
     // m=2 subspaces of 2 dims, k=2 centroids each, flat layout
     // (sub·k + code)·dsub + i:
     //   sub0: c0=(1,0)  c1=(0,1)   sub1: c0=(2,2)  c1=(1,1)
@@ -259,7 +266,6 @@ class FunctionsSpec extends SparkSpec {
   test("simhash64 equals the unfused CASE-WHEN-dot form it replaces") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
-    graft.functions.VectorFunctions.register(spark)
     // 3 planes over 2 dims, row-major: the reference is the unfused
     // sum of CASE WHEN dot >= 0 THEN 2^b the oracle SQL spells out
     val planes = Array(1.0, 0.0, 0.0, -1.0, 1.0, 1.0)

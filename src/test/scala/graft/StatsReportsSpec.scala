@@ -355,7 +355,6 @@ class StatsReportsSpec extends SparkSpec {
     byBucket.foreach { case (_, rows) => assert(rows.length <= cap) }
     // recompute the bucket assignment with the same deterministic
     // geometry and check the per-bucket min-k election
-    graft.functions.VectorFunctions.register(spark)
     val full = spark.read.parquet(s"$sfDir/embeddings.parquet")
       .select(col("vec_id"),
         graft.llm.Similarity.lshBucket(

@@ -673,7 +673,6 @@ class StreamingSpec extends SparkSpec {
     import graft.streaming.IngestKmv
     import graft.functions.KmvAggregator
     implicit val sc = spark.sqlContext
-    graft.functions.HashFunctions.register(spark)
     val base = java.nio.file.Files.createTempDirectory("graft_kmv").toString
     val mem = MemoryStream[(Long, String)]
     val q = IngestKmv.run(mem.toDF().toDF("doc_id", "text"),

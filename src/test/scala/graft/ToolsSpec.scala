@@ -65,7 +65,6 @@ class ToolsSpec extends SparkSpec {
     // a replica's unit direction differs from its source: compare the
     // cosine of (base vec, replica-1 vec) — strictly below 1 for all
     import org.apache.spark.sql.functions.{sqrt => sqrtC}
-    graft.functions.VectorFunctions.register(spark)
     val dotUdfFree = {
       val a = embBase.select(col("vec_id").as("k"),
         col("embedding").cast("array<double>").as("va"))

@@ -14,7 +14,6 @@ class TopKSpec extends SparkSpec {
   private def topkOf(rows: Seq[(Long, java.lang.Double, java.lang.Long)],
       k: Int): Map[Long, Seq[(Double, Long)]] = {
     import spark.implicits._
-    TopKFunctions.register(spark)
     rows.toDF("g", "ord", "id")
       .groupBy("g")
       .agg(TopKFunctions.topkBy(col("ord"), col("id"), lit(k)).as("tk"))
@@ -52,7 +51,6 @@ class TopKSpec extends SparkSpec {
     // mirrors (s1/q26) uses Spark's sort, which places NaN last under
     // desc... meaning greatest; the heap must agree or s9 diverges
     import spark.implicits._
-    TopKFunctions.register(spark)
     val rows = Seq(
       (1L, Double.NaN, 10L), (1L, 0.9, 11L), (1L, 0.8, 12L), (1L, 0.7, 13L))
     val got = topkOf(rows.map { case (g, o, i) =>
@@ -73,7 +71,6 @@ class TopKSpec extends SparkSpec {
     // 1000 pairs with colliding ords across many partitions: any
     // merge order must elect the same winners as a global sort
     import spark.implicits._
-    TopKFunctions.register(spark)
     val rows = (0L until 1000L).map(i => (i % 7, (i % 13).toDouble, i))
     val expected = rows.groupBy(_._1).map { case (g, rs) =>
       g -> rs.map(r => (r._2, r._3))

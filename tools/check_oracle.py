@@ -48,13 +48,23 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
     df = df.sort_values(by=list(df.columns), na_position="first")
     return df.reset_index(drop=True)
 
+# Verify writes the queries that threw (name -> message) to failed.json;
+# a thrown query has no output dir, so without this it would go unseen.
+failed_path = f"{out_dir}/failed.json"
+failed = json.load(open(failed_path)) if os.path.exists(failed_path) else {}
+
 n_pass = n_fail = 0
+for name, msg in sorted(failed.items()):
+    n_fail += 1
+    print(f"FAIL  {name}: THREW {str(msg)[:200]}")
 # DuckDB's own per-query runtime: a free external reference point for
 # relative query cost at this SF (a single-node columnar engine on the
 # same parquet), tracked round-over-round next to the Spark bench.
 timings = {}
 for qdir in sorted(glob.glob(f"{out_dir}/*/")):
     name = os.path.basename(qdir.rstrip("/"))
+    if name in failed:
+        continue  # already reported; any dir here is stale
     got = pd.concat([pd.read_parquet(f) for f in glob.glob(f"{qdir}/*.parquet")])
     if name not in oracle:
         status = f"rows-only ({len(got)} rows)"
