@@ -4,6 +4,28 @@ import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 object Bench {
+  // v1 keeps the round-6 rule set (so v1 hashes stay comparable with
+  // the round-6 artifact) PLUS the lambda-counter fix: DSL
+  // higher-order functions name their variables from a JVM-GLOBAL
+  // counter ("lambda x_5"), so any HOF query's plan text depends on
+  // how many lambdas earlier queries created — the round-6 hashes of
+  // the six HOF queries (t4/t8/t9/q38/m1/m2) were never reproducible
+  // in the first place, so no freeze can preserve them; stripping
+  // the counter makes them stable from this round on.
+  def normalizeV1(plan: String): String = plan
+    .replaceAll("#\\d+", "#")
+    .replaceAll("plan_id=\\d+", "plan_id=")
+    .replaceAll("file:[^\\],\\s)]+", "file:")
+    .replaceAll("lambda ([a-z]+)_\\d+", "lambda $1_")
+    // JVM lambda object identity (mapPartitions closures print as
+    // "Lambda$2589/0x7fe0...@6e4ac3f5") — fresh per JVM by nature
+    .replaceAll("Lambda\\$\\d+/0x[0-9a-f]+(@[0-9a-f]+)?", "Lambda\\$")
+    // Scala object identity (t19–t22's typed aggregators print as
+    // "CmsAggregator$@1aa21319") — also fresh per JVM
+    .replaceAll("\\$@[0-9a-f]+", "\\$@")
+  def normalize(plan: String): String = normalizeV1(plan)
+    .replaceAll("QueryStage \\d+", "QueryStage") // stage ids are volatile
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = graft.core.Session.cpus
@@ -114,24 +136,6 @@ object Bench {
     def md5_12(s: String): String =
       java.security.MessageDigest.getInstance("MD5")
         .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString.take(12)
-    // v1 keeps the round-6 rule set (so v1 hashes stay comparable with
-    // the round-6 artifact) PLUS the lambda-counter fix: DSL
-    // higher-order functions name their variables from a JVM-GLOBAL
-    // counter ("lambda x_5"), so any HOF query's plan text depends on
-    // how many lambdas earlier queries created — the round-6 hashes of
-    // the six HOF queries (t4/t8/t9/q38/m1/m2) were never reproducible
-    // in the first place, so no freeze can preserve them; stripping
-    // the counter makes them stable from this round on.
-    def normalizeV1(plan: String): String = plan
-      .replaceAll("#\\d+", "#")
-      .replaceAll("plan_id=\\d+", "plan_id=")
-      .replaceAll("file:[^\\],\\s)]+", "file:")
-      .replaceAll("lambda ([a-z]+)_\\d+", "lambda $1_")
-      // JVM lambda object identity (mapPartitions closures print as
-      // "Lambda$2589/0x7fe0...@6e4ac3f5") — fresh per JVM by nature
-      .replaceAll("Lambda\\$\\d+/0x[0-9a-f]+(@[0-9a-f]+)?", "Lambda\\$")
-    def normalize(plan: String): String = normalizeV1(plan)
-      .replaceAll("QueryStage \\d+", "QueryStage") // stage ids are volatile
     // plan fingerprint v2: md5 of the FINAL physical plan AFTER this
     // QueryExecution actually ran, with the AdaptiveSparkPlanExec
     // wrapper unwrapped — so a runtime AQE re-plan (a demoted

@@ -32,6 +32,10 @@ import org.apache.spark.sql.types.DataType
   * rewrite never reached the parquet scan (the predicates are on
   * computed columns), and with splits >= cores the scan, projection
   * and filter share one stage regardless of pushdown.
+  *
+  * Its sanctioned uses are pinned by `FunctionsSpec` ("eval_once is used
+  * only at its two reviewed call sites"); a new use must meet the
+  * contract above and be added there.
   */
 case class EvalOnce(child: Expression) extends UnaryExpression {
   override lazy val deterministic: Boolean = false

@@ -4,34 +4,40 @@ import org.apache.spark.ml.{Pipeline, PipelineStage}
 import org.apache.spark.ml.feature.{OneHotEncoder, StandardScaler, StringIndexer, VectorAssembler}
 
 /** Feature pipeline builder (SURVEY §2.5 M1–M4, M10; reference
-  * `pipeline_creator`, `Scripts/3_...py:56-72`): per-categorical
-  * StringIndexer (+skip) → OneHotEncoder, numeric VectorAssembler →
-  * StandardScaler (unit std-dev, no centering — reference default),
-  * final assembler over encoded + scaled, then the estimator.
+  * `pipeline_creator`, `Scripts/3_...py:56-72`): one multi-column
+  * StringIndexer (+skip) → one multi-column OneHotEncoder, numeric
+  * VectorAssembler → StandardScaler (unit std-dev, no centering —
+  * reference default), final assembler over encoded + scaled, then the
+  * estimator.
   *
   * All six stage families are executor-side MLlib transforms; the only
-  * driver work is the per-indexer distinct-count fit.
+  * driver work is the indexer's one distinct-count fit over every
+  * categorical column.
   */
 object Features {
 
   /** The five feature-stage families, estimator-less (shared by
-    * [[pipelineCreator]] and [[featureSize]]).
+    * [[pipelineCreator]] and [[featureSize]]). With no categorical
+    * columns the indexer and encoder stages are left out.
     */
   def featureStages(categoricalCols: Seq[String], numericalCols: Seq[String])
       : Seq[PipelineStage] = {
-    val indexers = categoricalCols.map(c =>
-      new StringIndexer().setInputCol(c).setOutputCol(c + "_string")
-        .setHandleInvalid("skip"))
-    val encoders = categoricalCols.map(c =>
-      new OneHotEncoder().setInputCol(c + "_string").setOutputCol(c + "_encoded"))
+    val indexed = categoricalCols.map(_ + "_string").toArray
+    val encoded = categoricalCols.map(_ + "_encoded").toArray
+    val categorical =
+      if (categoricalCols.isEmpty) Nil
+      else Seq(
+        new StringIndexer().setInputCols(categoricalCols.toArray)
+          .setOutputCols(indexed).setHandleInvalid("skip"),
+        new OneHotEncoder().setInputCols(indexed).setOutputCols(encoded))
     val assembleNum = new VectorAssembler()
       .setInputCols(numericalCols.toArray).setOutputCol("vector_num")
     val scale = new StandardScaler()
       .setInputCol("vector_num").setOutputCol("vector_num_scaled")
     val assembleAll = new VectorAssembler()
-      .setInputCols((categoricalCols.map(_ + "_encoded") :+ "vector_num_scaled").toArray)
+      .setInputCols(encoded :+ "vector_num_scaled")
       .setOutputCol("features")
-    indexers ++ encoders ++ Seq(assembleNum, scale, assembleAll)
+    categorical ++ Seq(assembleNum, scale, assembleAll)
   }
 
   def pipelineCreator(categoricalCols: Seq[String], numericalCols: Seq[String],

@@ -2,8 +2,8 @@ package graft.stats
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.ml.feature.{StringIndexer, UnivariateFeatureSelector, VarianceThresholdSelector, VectorAssembler}
-import org.apache.spark.ml.linalg.{Matrix, Vector}
+import org.apache.spark.ml.feature.{StringIndexer, UnivariateFeatureSelector, VectorAssembler}
+import org.apache.spark.ml.linalg.{DenseMatrix, Matrix, Vector}
 import org.apache.spark.ml.stat.{ChiSquareTest, Correlation, Summarizer}
 
 /** Statistical-analysis & feature-selection surface (SURVEY §2.5
@@ -27,13 +27,14 @@ object Statistics {
   }
 
   /** M1: frequency-descending string indexing of every categorical
-    * column, appended as `<col>_string` (`Scripts/2_...py:56-57`).
+    * column, appended as `<col>_string` (`Scripts/2_...py:56-57`). One
+    * multi-column indexer: a single counting job fits every column.
     */
   def indexCategoricals(df: DataFrame, catCols: Seq[String]): DataFrame =
-    catCols.foldLeft(df) { (d, c) =>
-      new StringIndexer().setInputCol(c).setOutputCol(c + "_string")
-        .setHandleInvalid("skip").fit(d).transform(d)
-    }
+    if (catCols.isEmpty) df
+    else new StringIndexer().setInputCols(catCols.toArray)
+      .setOutputCols(catCols.map(_ + "_string").toArray)
+      .setHandleInvalid("skip").fit(df).transform(df)
 
   /** M3+M5: assemble `cols` and compute the Pearson correlation matrix
     * (`Scripts/2_...py:59-61`). Executors run one treeAggregate; only
@@ -45,6 +46,16 @@ object Statistics {
       .setInputCols(cols.toArray).setOutputCol(vecCol)
       .setHandleInvalid("skip").transform(df)
     Correlation.corr(assembled, vecCol).head().getAs[Matrix](0)
+  }
+
+  /** The correlation matrix over a subset of `m`'s columns, in the
+    * order of `keep`. A Pearson entry depends only on its two columns,
+    * so this equals a fresh correlation over `keep` whenever the other
+    * columns drop no extra rows (no null or NaN in them).
+    */
+  def subMatrix(m: Matrix, keep: Seq[Int]): Matrix = {
+    val k = keep.size
+    new DenseMatrix(k, k, Array.tabulate(k * k)(i => m(keep(i % k), keep(i / k))))
   }
 
   /** M6: χ² independence of each indexed categorical vs the label
@@ -62,62 +73,83 @@ object Statistics {
     catCols.indices.map(i => (catCols(i), p(i), d(i), s(i)))
   }
 
-  /** M7: univariate top-k selection (`Scripts/2_...py:103-118`) —
-    * χ² for categorical features, ANOVA-F for continuous, vs the
-    * categorical label. Returns selected column names in index order.
+  /** M7, categorical arm: the `k` features of lowest χ² p-value, ties
+    * by feature index, NaN last, in that order — the rule (and the
+    * order) of `UnivariateFeatureSelector`'s categorical
+    * `numTopFeatures` mode, read off an already computed [[chiSquare]].
+    */
+  def chiSquareTopK(chi: Seq[(String, Double, Int, Double)], k: Int): Seq[String] =
+    chi.zipWithIndex
+      .sortBy { case ((_, p, _, _), i) => (p, i) }(
+        Ordering.Tuple2(Ordering.Double.TotalOrdering, Ordering.Int))
+      .take(k).map(_._1._1)
+
+  /** M7, continuous arm: ANOVA-F top-k selection vs the categorical
+    * label (`Scripts/2_...py:103-118`). Returns the selected column
+    * names in the selector's order.
     */
   def univariateSelect(df: DataFrame, cols: Seq[String], vecCol: String,
-      featureType: String, k: Int, label: String = "Delay_Status")
-      : Seq[String] = {
+      k: Int, label: String = "Delay_Status"): Seq[String] = {
     val selector = new UnivariateFeatureSelector()
       .setFeaturesCol(vecCol).setOutputCol(vecCol + "_selected")
       .setLabelCol(label).setSelectionMode("numTopFeatures")
-      .setFeatureType(featureType).setLabelType("categorical")
+      .setFeatureType("continuous").setLabelType("categorical")
       .setSelectionThreshold(k)
     selector.fit(df).selectedFeatures.toSeq.map(cols)
   }
 
   /** M8+M9: variance-threshold selection with the reference's
     * "threshold = 6th-largest variance ⇒ keep the top-(keep)" rule
-    * (`Scripts/2_...py:124-131`): Summarizer computes per-feature
-    * variance distributed; the driver sorts the tiny vector and picks
-    * the (keep)-th largest as the threshold.
+    * (`Scripts/2_...py:124-131`). One Summarizer pass computes variance,
+    * max and min per feature; the driver sorts the tiny vectors and
+    * applies `VarianceThresholdSelector`'s own rule (a feature whose
+    * max equals its min counts as variance 0, and a feature is kept
+    * when its variance is strictly above the threshold).
     */
   def varianceTopK(df: DataFrame, numCols: Seq[String],
       vecCol: String = "vector_assem_num", keep: Int = 6): Seq[String] = {
-    val kth = df
-      .select(Summarizer.metrics("variance").summary(col(vecCol)).as("s"))
-      .select("s.variance").head().getAs[Vector](0)
-      .toArray.sorted(Ordering[Double].reverse)(keep - 1)
+    val s = df
+      .select(Summarizer.metrics("variance", "max", "min").summary(col(vecCol)).as("s"))
+      .select("s.variance", "s.max", "s.min").head()
+    val Seq(variance, max, min) = (0 to 2).map(s.getAs[Vector](_).toArray)
     // Spark 4's selector keeps variance strictly > threshold; the
     // reference (Spark 3.3) observably kept the k-th feature itself
     // (report lists 6 kept with the 6th-largest as threshold), so step
     // just below the k-th value to preserve reference behavior across
     // the version drift (SURVEY §7.4 item 3).
-    val threshold = Math.nextDown(kth)
-    val model = new VarianceThresholdSelector()
-      .setFeaturesCol(vecCol).setOutputCol(vecCol + "_selected")
-      .setVarianceThreshold(threshold).fit(df)
-    model.selectedFeatures.toSeq.map(numCols)
+    val threshold = Math.nextDown(variance.sorted(Ordering[Double].reverse)(keep - 1))
+    numCols.indices
+      .filter(i => (if (max(i) == min(i)) 0.0 else variance(i)) > threshold)
+      .map(numCols)
   }
 
-  /** The full script-2 flow on a cleaned table: index, correlate,
-    * drop the reference's high-correlation columns, χ², univariate ×2,
-    * variance-threshold. Returns the three selected-feature lists
+  /** The result of [[analyze]]: the three selected-feature lists
     * (uniCat, uniNum, varNum) — the driver-feedback values that
     * parameterize training (kept as in-process Scala values; SURVEY
-    * §7.4 item 5).
+    * §7.4 item 5) — plus the χ² rows and both correlation matrices.
     */
   case class Selection(uniCat: Seq[String], uniNum: Seq[String], varNum: Seq[String],
       chi: Seq[(String, Double, Int, Double)], corrBefore: Matrix, corrAfter: Matrix)
 
+  /** The full script-2 flow on a cleaned table: index, correlate,
+    * drop the reference's high-correlation columns, χ², univariate ×2,
+    * variance-threshold. Each statistic family is one pass: one
+    * indexer fit, one correlation (`corrAfter` is its sub-matrix), one
+    * χ² test (uniCat is its top-3), one ANOVA fit and one Summarizer
+    * pass.
+    *
+    * Precondition: no null or NaN in `cleanedDf`, which
+    * `Cleaning.cleaned`'s `na.drop()` guarantees. Otherwise the dropped
+    * columns could remove rows from `corrBefore` that `corrAfter`
+    * should keep.
+    */
   def analyze(cleanedDf: DataFrame, label: String = "Delay_Status",
       dropCols: Seq[String] = Seq("Origin", "Dest", "Distance", "Quarter", "Diverted"))
       : Selection = {
-    // The |cat| eager StringIndexer fits plus two correlations and
-    // three selector fits each rescan the input — persist it for
-    // library callers that didn't (guarded so an already-cached
-    // caller's StorageLevel is left alone).
+    // The indexer fit, the correlation and the cached feature frame
+    // each rescan the input — persist it for library callers that
+    // didn't (guarded so an already-cached caller's StorageLevel is
+    // left alone).
     val ownPersist =
       cleanedDf.storageLevel == org.apache.spark.storage.StorageLevel.NONE
     if (ownPersist) cleanedDf.persist()
@@ -129,36 +161,28 @@ object Statistics {
       dropCols: Seq[String]): Selection = {
     val (cat0, num0) = catNumCols(cleanedDf, label)
     val indexed0 = indexCategoricals(cleanedDf, cat0)
-    val corrBefore = correlationMatrix(indexed0,
-      cat0.map(_ + "_string") ++ num0 :+ label)
+    val before = cat0.map(_ + "_string") ++ num0 :+ label
+    val corrBefore = correlationMatrix(indexed0, before)
 
     val df = indexed0.drop(dropCols ++ dropCols.map(_ + "_string"): _*)
     val (cat, num) = {
       val (c, n) = catNumCols(df, label)
       (c.filterNot(_.endsWith("_string")), n.filterNot(_.endsWith("_string")))
     }
-    val corrAfter = correlationMatrix(df, cat.map(_ + "_string") ++ num :+ label)
+    val corrAfter = subMatrix(corrBefore,
+      (cat.map(_ + "_string") ++ num :+ label).map(before.indexOf))
 
-    val withCat = new VectorAssembler()
-      .setInputCols(cat.map(_ + "_string").toArray).setOutputCol("vector_assem_cat")
-      .transform(df)
-    // Three selector fits + χ² read this frame — cache it once.
+    // χ², the ANOVA selector and the variance pass read this frame —
+    // cache it once.
     val withNum = new VectorAssembler()
       .setInputCols(num.toArray).setOutputCol("vector_assem_num")
-      .transform(withCat).persist()
+      .transform(df).persist()
 
     try {
-      val chi = {
-        // withNum carries vector_assem_cat too — run χ² on the cached frame
-        val r = ChiSquareTest.test(withNum, "vector_assem_cat", label).head()
-        val p = r.getAs[Vector]("pValues").toArray
-        val d = r.getSeq[Int](r.fieldIndex("degreesOfFreedom"))
-        val s = r.getAs[Vector]("statistics").toArray
-        cat.indices.map(i => (cat(i), p(i), d(i), s(i)))
-      }
+      val chi = chiSquare(withNum, cat, label)
       Selection(
-        uniCat = univariateSelect(withNum, cat, "vector_assem_cat", "categorical", 3, label),
-        uniNum = univariateSelect(withNum, num, "vector_assem_num", "continuous", 7, label),
+        uniCat = chiSquareTopK(chi, 3),
+        uniNum = univariateSelect(withNum, num, "vector_assem_num", 7, label),
         varNum = varianceTopK(withNum, num),
         chi = chi, corrBefore = corrBefore, corrAfter = corrAfter)
     } finally { withNum.unpersist(); () }

@@ -333,4 +333,23 @@ class FunctionsSpec extends SparkSpec {
         .collect())
     assert(e.getCondition == "NON_FOLDABLE_ARGUMENT")
   }
+
+  test("eval_once is used only at its two reviewed call sites") {
+    // EvalOnce hides non-determinism from the optimizer, which is safe
+    // only for a deterministic wrapped expression (its scaladoc). Every
+    // use outside the defining file is listed here after that review.
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    val uses = java.nio.file.Files.walk(root).iterator().asScala.toSeq
+      .filter(p => p.toString.endsWith(".scala") &&
+        p.getFileName.toString != "BarrierFunctions.scala")
+      .flatMap { p =>
+        java.nio.file.Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if line.contains("evalOnce(") || line.contains("eval_once(") =>
+            s"${root.relativize(p)}:${i + 1}"
+        }
+      }
+    assert(uses.toSet == Set("graft/llm/Curation.scala:90", "graft/llm/Curation.scala:613"),
+      uses)
+  }
 }

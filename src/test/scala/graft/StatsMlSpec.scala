@@ -1,6 +1,14 @@
 package graft
 
-import org.apache.spark.ml.evaluation.BinaryClassificationEvaluator
+import org.apache.spark.ml.{Pipeline, PipelineStage}
+import org.apache.spark.ml.classification.LogisticRegression
+import org.apache.spark.ml.evaluation.MulticlassClassificationEvaluator
+import org.apache.spark.ml.feature.{OneHotEncoder, StandardScaler, StringIndexer, UnivariateFeatureSelector, VarianceThresholdSelector, VectorAssembler}
+import org.apache.spark.ml.linalg.{Matrix, Vector}
+import org.apache.spark.ml.stat.{Correlation, Summarizer}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import graft.etl.{AirlineFixture, Cleaning}
 import graft.ml.{Evaluate, Features, Models, TrainJob, Tuning}
 import graft.stats.Statistics
@@ -73,6 +81,127 @@ class StatsMlSpec extends SparkSpec {
       .setSeed(777L).setMaxDepth(5)
     val r = TrainJob.run(cleaned, cat.take(1), num, dt, None)
     assert(r.metrics.accuracy > 0.0)
+  }
+
+  // The fused one-pass paths against Spark's library path, computed
+  // here as the reference.
+
+  private def chainIndexed(df: DataFrame, cat: Seq[String]): DataFrame =
+    cat.foldLeft(df) { (d, c) =>
+      new StringIndexer().setInputCol(c).setOutputCol(c + "_string")
+        .setHandleInvalid("skip").fit(d).transform(d)
+    }
+
+  private def assemble(df: DataFrame, cols: Seq[String], out: String) =
+    new VectorAssembler().setInputCols(cols.toArray).setOutputCol(out).transform(df)
+
+  test("fused indexing: one multi-column indexer equals the per-column chain") {
+    val (cat, _) = Statistics.catNumCols(cleaned)
+    val fused = Statistics.indexCategoricals(cleaned, cat)
+    val chained = chainIndexed(cleaned, cat)
+    assert(fused.columns.toSeq == chained.columns.toSeq)
+    assert(fused.collect().toSeq == chained.collect().toSeq)
+    assert(Statistics.indexCategoricals(cleaned, Nil) eq cleaned)
+  }
+
+  test("fused analyze: corrAfter, uniCat and varNum equal the library path") {
+    val sel = Statistics.analyze(cleaned)
+    // analyze's kept frame, categoricals and numerics, from the
+    // per-column library indexers
+    val drop = Seq("Origin", "Dest", "Distance", "Quarter", "Diverted")
+    val df = chainIndexed(cleaned, Statistics.catNumCols(cleaned)._1)
+      .drop(drop ++ drop.map(_ + "_string"): _*)
+    val (cat, num) = {
+      val (c, n) = Statistics.catNumCols(df)
+      (c.filterNot(_.endsWith("_string")), n.filterNot(_.endsWith("_string")))
+    }
+    val after = cat.map(_ + "_string") ++ num :+ "Delay_Status"
+    val corr = Correlation.corr(assemble(df, after, "v"), "v").head().getAs[Matrix](0)
+    assert(sel.corrAfter.numRows == corr.numRows && sel.corrAfter.numCols == corr.numCols)
+    sel.corrAfter.toArray.zip(corr.toArray)
+      .foreach { case (a, b) => assert(math.abs(a - b) <= 1e-12, s"$a vs $b") }
+
+    val withCat = assemble(df, cat.map(_ + "_string"), "vc")
+    val uni = new UnivariateFeatureSelector().setFeaturesCol("vc")
+      .setLabelCol("Delay_Status").setSelectionMode("numTopFeatures")
+      .setFeatureType("categorical").setLabelType("categorical")
+      .setSelectionThreshold(3).fit(withCat)
+    assert(sel.uniCat == uni.selectedFeatures.toSeq.map(cat))
+
+    val withNum = assemble(df, num, "vn")
+    val variances = withNum.select(Summarizer.variance(col("vn")))
+      .head().getAs[Vector](0).toArray
+    val vts = new VarianceThresholdSelector().setFeaturesCol("vn")
+      .setVarianceThreshold(Math.nextDown(variances.sorted(Ordering[Double].reverse)(5)))
+      .fit(withNum)
+    assert(sel.varNum == vts.selectedFeatures.toSeq.map(num))
+  }
+
+  private lazy val trainTest = TrainJob.split(cleaned.withColumnRenamed("Delay_Status", "label"))
+
+  test("one-pass evaluation equals the five multiclass evaluators") {
+    val (cat, num) = Statistics.catNumCols(cleaned)
+    val (train, test) = trainTest
+    val preds = Features.pipelineCreator(cat, num, new LogisticRegression())
+      .fit(train).transform(test).cache()
+    try {
+      val m = Evaluate.metrics(preds)
+      def mc(name: String) = new MulticlassClassificationEvaluator()
+        .setMetricName(name).evaluate(preds)
+      assert(m.accuracy == mc("accuracy"))
+      assert(m.tpr == mc("truePositiveRateByLabel"))
+      assert(m.fpr == mc("falsePositiveRateByLabel"))
+      assert(m.precision == mc("precisionByLabel"))
+      assert(m.f1 == mc("f1"))
+    } finally { preds.unpersist(); () }
+  }
+
+  test("multi-column feature stages equal the per-column stages") {
+    val (cat, num) = Statistics.catNumCols(cleaned)
+    val (train, test) = trainTest
+    val perColumn: Seq[PipelineStage] =
+      cat.map(c => new StringIndexer().setInputCol(c).setOutputCol(c + "_string")
+        .setHandleInvalid("skip")) ++
+      cat.map(c => new OneHotEncoder().setInputCol(c + "_string").setOutputCol(c + "_encoded")) ++
+      Seq(new VectorAssembler().setInputCols(num.toArray).setOutputCol("vector_num"),
+        new StandardScaler().setInputCol("vector_num").setOutputCol("vector_num_scaled"),
+        new VectorAssembler()
+          .setInputCols((cat.map(_ + "_encoded") :+ "vector_num_scaled").toArray)
+          .setOutputCol("features"))
+    def features(stages: Seq[PipelineStage]) =
+      new Pipeline().setStages(stages.toArray).fit(train).transform(test)
+        .select("features").collect().toSeq.map(_.getAs[Vector](0))
+    assert(features(Features.featureStages(cat, num)) == features(perColumn))
+  }
+
+  test("analyze runs in 14 Spark jobs on the fixture") {
+    cleaned.count()
+    val group = "stats-ml-spec-analyze"
+    val marker = group + "-marker"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(seen.add)
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "analyze")
+      Statistics.analyze(cleaned)
+      // the listener bus delivers in order: once the marker job is
+      // seen, every analyze job has been counted
+      sc.setJobGroup(marker, "marker")
+      spark.range(1).count()
+      val deadline = System.nanoTime() + 30e9.toLong
+      while (!seen.contains(marker) && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(seen.contains(marker))
+      val jobs = seen.toArray.count(_ == group)
+      assert(jobs == 14, s"analyze launched $jobs jobs")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 
   test("model registry: all eight families expose estimator + grid") {

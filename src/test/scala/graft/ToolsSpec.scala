@@ -83,4 +83,14 @@ class ToolsSpec extends SparkSpec {
     assert(maxCos < 1.0 - 1e-9,
       s"replica vectors must change direction, max cos = $maxCos")
   }
+
+  test("plan fingerprints ignore per-JVM object identities") {
+    // t19–t22's typed aggregators print their object identity, which
+    // differs in every JVM; both fingerprint forms must strip it
+    val a = "ObjectHashAggregate(keys=[], functions=[graft.functions.CmsAggregator$@1aa21319#12])"
+    val b = "ObjectHashAggregate(keys=[], functions=[graft.functions.CmsAggregator$@6e4ac3f5#40])"
+    assert(Bench.normalizeV1(a) == Bench.normalizeV1(b))
+    assert(Bench.normalize(a) == Bench.normalize(b))
+    assert(Bench.normalize(a) != Bench.normalize(a.replace("Cms", "Hll")))
+  }
 }
