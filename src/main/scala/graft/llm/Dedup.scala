@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.LongType
-import graft.core.Tables
+import graft.core.{DriverTier, Tables}
 import TextAnalysis.hash60
 
 /** Deduplication operators (SURVEY §4.3 north-star) over `documents`:
@@ -840,16 +840,39 @@ object Dedup {
   }
 
   // -- d8: dedup cluster resolution ----------------------------------------
+  /** The cached RDD behind a `localCheckpoint`ed frame, for explicit
+    * release. Superseded checkpoints are otherwise freed only when the
+    * driver GC collects the Dataset and ContextCleaner notices — on a
+    * large heap that lag lets an iterative loop pile up dead label
+    * snapshots in block-manager memory, evicting live cache. Only call
+    * on checkpoints the returned plan no longer references: the
+    * lineage is truncated, so freed blocks are NOT recomputable.
+    */
+  private def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
+    df.queryExecution.analyzed.collectFirst {
+      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
+    }
+
+  private[graft] def releaseCheckpoint(df: DataFrame): Unit =
+    checkpointRdd(df).foreach(_.unpersist(false))
+
   /** Connected components over a symmetric-closed candidate edge list:
     * returns (id, cluster_id) with cluster_id = the component's min id.
     * This is the consumer the [[MaxBucket]] star-link guard presumes —
     * star edges keep an oversized bucket connected, and the component
     * min is exactly the doc a union-find would elect.
     *
-    * Two tiers, cut over on the measured canonical edge count (the
-    * first snapshot's aggregate — no extra job):
-    *  - [[CcDriverMaxEdges]] or fewer edges: ONE collect + a
-    *    path-compressed min-rooted union-find on the driver. The
+    * Two tiers, cut over by [[graft.core.DriverTier]] on the RAW
+    * (src, dst) row count of the checkpointed input — duplicates and
+    * self-loops included, so a duplicate-laden candidate stream can
+    * take the distributed tier while its canonical edge set is small:
+    *  - [[graft.core.DriverTier.CcDriverMaxEdges]] or fewer rows: ONE
+    *    collect + a path-compressed min-rooted union-find on the
+    *    driver, which yields the exact labels large-star/small-star
+    *    converges to. Union-find is duplicate- and self-loop-
+    *    insensitive (a repeated union is a no-op), so the raw pairs ARE
+    *    the canonical input and the node set falls out of the same
+    *    collect. The
     *    candidate graph is near-dup pairs, orders of magnitude
     *    smaller than the corpus, and the label table it yields is
     *    broadcast-sized by the same argument — this is the
@@ -871,65 +894,24 @@ object Dedup {
     *
     * Scale shape: the vertex set is only docs that appear in some
     * candidate pair — orders of magnitude smaller than the corpus —
-    * and each pass shuffles (id, lbl) longs only. `localCheckpoint`
-    * truncates lineage every pass so plan size and scheduling cost
-    * stay O(1) per iteration (the classic iterative-Spark plan-blowup
-    * fix); superseded checkpoint RDDs are reclaimed by Spark's
-    * ContextCleaner once unreferenced. Convergence is detected by the
-    * label-sum fixpoint: min-label propagation only ever decreases
-    * labels, so sum(lbl) is strictly decreasing until converged — one
-    * cheap aggregate action per pass instead of a change-count join.
+    * and each round shuffles (hi, lo) longs only. Every round's edge
+    * set is persisted and rebuilt from its RDD, so plan size and
+    * planning cost stay O(1) per round, and the superseded round is
+    * released as soon as the next one materializes. Convergence: the
+    * (count, Σhi, Σlo) triple, computed in the snapshot's own job,
+    * screens for an unchanged edge set; only a triple match pays the
+    * exact `except`.
     */
-  /** The cached RDD behind a `localCheckpoint`ed frame, for explicit
-    * release. Superseded checkpoints are otherwise freed only when the
-    * driver GC collects the Dataset and ContextCleaner notices — on a
-    * large heap that lag lets an iterative loop pile up dead label
-    * snapshots in block-manager memory, evicting live cache. Only call
-    * on checkpoints the returned plan no longer references: the
-    * lineage is truncated, so freed blocks are NOT recomputable.
-    */
-  private def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }
-
-  private[graft] def releaseCheckpoint(df: DataFrame): Unit =
-    checkpointRdd(df).foreach(_.unpersist(false))
-
-  /** Edge-count cutover between the driver union-find and the
-    * distributed large-star/small-star loop: 2²¹ canonical edges is
-    * ~32 MB of longs on the driver — the same order as a broadcast
-    * join's build side, and the label table it produces broadcasts
-    * back for the same reason. Candidate-pair graphs are orders of
-    * magnitude smaller than the corpus (near-dup fraction × bucket
-    * co-occurrence), so even multi-TB corpora usually land under it;
-    * the distributed loop is the correctness backstop, not a rarity
-    * apology — specs pin both paths label-identical.
-    */
-  val CcDriverMaxEdges: Long = 1L << 21
-
   def connectedComponents(edges: DataFrame, maxIter: Int = 25,
-      driverMaxEdges: Long = CcDriverMaxEdges): DataFrame = {
-    val ccT0 = System.nanoTime()
+      driverMaxEdges: Long = DriverTier.CcDriverMaxEdges): DataFrame = {
     // materialize the upstream edge pipeline ONCE: both derivations
     // below (node list, canonical edge set) would otherwise recompute
     // the full candidate-generation lineage — for the dedup graph
     // that's two complete LSH passes over the corpus
     val e = edges.toDF("src", "dst").localCheckpoint(true)
-    // DRIVER TIER, gated on the RAW edge count (r16): raw >= canonical,
-    // so the broadcast-scale byte budget still bounds the collect, and
-    // deciding on the count the checkpoint already paid for lets the
-    // driver path skip THREE whole jobs the old flow ran first — the
-    // node-list checkpoint, the canonical-distinct snap (an exchange +
-    // distinct + persist over the pair stream), and the second collect.
-    // Union-find is duplicate- and self-loop-insensitive (a repeated
-    // union is a no-op), so the raw pairs ARE the canonical input; the
-    // node set falls out of the same single collect. Path-compressed,
-    // min-rooted: the exact labels large-star/small-star converges to.
-    val rawN = e.count()
-    if (rawN > 0 && rawN <= driverMaxEdges) {
-      val spark = e.sparkSession
-      val pairs = e.collect()
+    // gating on the RAW count spares the driver arm the node-list
+    // checkpoint, the canonical-distinct snap and a second collect
+    DriverTier.run(e, driverMaxEdges, "connectedComponents") { pairs =>
       releaseCheckpoint(e)
       val parent = new java.util.HashMap[Long, Long](pairs.length * 2)
       def find(x: Long): Long = {
@@ -953,129 +935,112 @@ object Dedup {
       }
       val out = new scala.collection.mutable.ArrayBuffer[(Long, Long)](nodeSet.size)
       nodeSet.forEach(id => out += ((id, find(id))))
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[cc] tier=driver rawEdges=$rawN " +
-          s"sec=${(System.nanoTime() - ccT0) / 1e9}")
+      val spark = e.sparkSession
       import spark.implicits._
-      return out.toSeq.toDF("doc_id", "cluster_id")
-    }
-    // checkpoint the node list too: it survives to the final labeling
-    // join, and re-derives with fresh attribute ids (same-attribute
-    // unions trip Catalyst's constraint rewriting)
-    val nodes = e.select(col("src").as("id"))
-      .union(e.select(col("dst").as("id")))
-      .distinct()
-      .localCheckpoint(true)
-    // Loop snapshots REBUILD the frame from the materialized RDD (one
-    // Row conversion per read of a two-long frame): a LogicalRDD
-    // otherwise CARRIES its origin plan's size estimate, and in a
-    // self-referential loop that carried estimate SQUARES every round
-    // — join stats multiply child sizes — so by ~round 20 the
-    // sizeInBytes BigInt has millions of digits and the NEXT round's
-    // stats visitor spends minutes on one multiplication. The rebuild
-    // resets the carried estimate to the leaf default, pinning the
-    // per-round planning cost constant. ONE job per snapshot:
-    // persist-then-aggregate materializes the edge frame into cache
-    // AND computes the convergence triple in the same action; unlike
-    // a checkpoint the lineage survives, so an evicted block is
-    // recomputable.
-    case class Snap(df: DataFrame, underlying: DataFrame, n: Long,
-        hiSum: java.math.BigDecimal, loSum: java.math.BigDecimal)
-    def snap(df: DataFrame): Snap = {
-      val c = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val r = c.agg(count(lit(1)),
-        sum(col("hi").cast("decimal(38,0)")),
-        sum(col("lo").cast("decimal(38,0)"))).head()
-      Snap(c.sparkSession.createDataFrame(c.rdd, c.schema), c,
-        r.getLong(0), r.getDecimal(1), r.getDecimal(2))
-    }
-    def release(s: Snap): Unit = s.underlying.unpersist(false)
-    var E = snap(e.filter(col("src") =!= col("dst"))
-      .select(greatest(col("src"), col("dst")).as("hi"),
-        least(col("src"), col("dst")).as("lo"))
-      .distinct())
-    var converged = E.n == 0L
-    val ccT1 = System.nanoTime()
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      // LARGE-STAR: every node connects its strictly-larger neighbors
-      // to the minimum of its closed neighborhood. The symmetric edge
-      // list is two in-memory projections of the cached round frame,
-      // so the whole round plans as ONE job: no intermediate
-      // materialization, no per-stage distinct (min-aggregation is
-      // duplicate-insensitive; only the round output dedupes). New
-      // edges (v, m) with v > u ≥ m are canonical by construction.
-      val sym = E.df.select(col("hi").as("u"), col("lo").as("v"))
-        .union(E.df.select(col("lo").as("u"), col("hi").as("v")))
-      val lsMin = sym.groupBy("u").agg(min(col("v")).as("mn"))
-        .select(col("u"), least(col("mn"), col("u")).as("m"))
-      val ls = sym.join(lsMin, "u")
-        .filter(col("v") > col("u"))
-        .select(col("v").as("hi"), col("m").as("lo"))
-      // SMALL-STAR: every node connects its smaller neighbors AND
-      // itself to the minimum of those — edges are already directed
-      // large→small (hi, lo), so the neighborhood is one groupBy(hi).
-      val ssMin = ls.groupBy("hi").agg(min(col("lo")).as("m"))
-      val ss = snap(ls.join(ssMin, "hi")
-        .select(explode(array(
-          struct(col("hi").as("a"), col("m").as("b")),
-          struct(col("lo").as("a"), col("m").as("b")))).as("p"))
-        .select(col("p.a").as("hi"), col("p.b").as("lo"))
-        .filter(col("hi") =!= col("lo"))
+      out.toSeq.toDF("doc_id", "cluster_id")
+    } { _ =>
+      // checkpoint the node list too: it survives to the final labeling
+      // join, and re-derives with fresh attribute ids (same-attribute
+      // unions trip Catalyst's constraint rewriting)
+      val nodes = e.select(col("src").as("id"))
+        .union(e.select(col("dst").as("id")))
+        .distinct()
+        .localCheckpoint(true)
+      // Loop snapshots REBUILD the frame from the materialized RDD (one
+      // Row conversion per read of a two-long frame): a LogicalRDD
+      // otherwise CARRIES its origin plan's size estimate, and in a
+      // self-referential loop that carried estimate SQUARES every round
+      // — join stats multiply child sizes — so by ~round 20 the
+      // sizeInBytes BigInt has millions of digits and the NEXT round's
+      // stats visitor spends minutes on one multiplication. The rebuild
+      // resets the carried estimate to the leaf default, pinning the
+      // per-round planning cost constant. ONE job per snapshot:
+      // persist-then-aggregate materializes the edge frame into cache
+      // AND computes the convergence triple in the same action; unlike
+      // a checkpoint the lineage survives, so an evicted block is
+      // recomputable.
+      case class Snap(df: DataFrame, underlying: DataFrame, n: Long,
+          hiSum: java.math.BigDecimal, loSum: java.math.BigDecimal)
+      def snap(df: DataFrame): Snap = {
+        val c = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        val r = c.agg(count(lit(1)),
+          sum(col("hi").cast("decimal(38,0)")),
+          sum(col("lo").cast("decimal(38,0)"))).head()
+        Snap(c.sparkSession.createDataFrame(c.rdd, c.schema), c,
+          r.getLong(0), r.getDecimal(1), r.getDecimal(2))
+      }
+      def release(s: Snap): Unit = s.underlying.unpersist(false)
+      var E = snap(e.filter(col("src") =!= col("dst"))
+        .select(greatest(col("src"), col("dst")).as("hi"),
+          least(col("src"), col("dst")).as("lo"))
         .distinct())
-      // fixpoint = the round returned the input edge set. The cheap
-      // (count, Σhi, Σlo) triple screens; only a triple match pays the
-      // exact one-sided except (count-equal + empty difference ⇒ set
-      // equality for distinct sets).
-      converged = ss.n == E.n &&
-        ss.hiSum.compareTo(E.hiSum) == 0 &&
-        ss.loSum.compareTo(E.loSum) == 0 &&
-        ss.df.except(E.df).isEmpty
-      // the superseded round is dead once `ss` materializes; release
-      // its blocks NOW instead of at the next full GC — N rounds would
-      // otherwise hold N edge snapshots in block-manager memory
+      var converged = E.n == 0L
+      var iter = 0
+      while (!converged && iter < maxIter) {
+        // LARGE-STAR: every node connects its strictly-larger neighbors
+        // to the minimum of its closed neighborhood. The symmetric edge
+        // list is two in-memory projections of the cached round frame,
+        // so the whole round plans as ONE job: no intermediate
+        // materialization, no per-stage distinct (min-aggregation is
+        // duplicate-insensitive; only the round output dedupes). New
+        // edges (v, m) with v > u ≥ m are canonical by construction.
+        val sym = E.df.select(col("hi").as("u"), col("lo").as("v"))
+          .union(E.df.select(col("lo").as("u"), col("hi").as("v")))
+        val lsMin = sym.groupBy("u").agg(min(col("v")).as("mn"))
+          .select(col("u"), least(col("mn"), col("u")).as("m"))
+        val ls = sym.join(lsMin, "u")
+          .filter(col("v") > col("u"))
+          .select(col("v").as("hi"), col("m").as("lo"))
+        // SMALL-STAR: every node connects its smaller neighbors AND
+        // itself to the minimum of those — edges are already directed
+        // large→small (hi, lo), so the neighborhood is one groupBy(hi).
+        val ssMin = ls.groupBy("hi").agg(min(col("lo")).as("m"))
+        val ss = snap(ls.join(ssMin, "hi")
+          .select(explode(array(
+            struct(col("hi").as("a"), col("m").as("b")),
+            struct(col("lo").as("a"), col("m").as("b")))).as("p"))
+          .select(col("p.a").as("hi"), col("p.b").as("lo"))
+          .filter(col("hi") =!= col("lo"))
+          .distinct())
+        // fixpoint = the round returned the input edge set. The cheap
+        // (count, Σhi, Σlo) triple screens; only a triple match pays the
+        // exact one-sided except (count-equal + empty difference ⇒ set
+        // equality for distinct sets).
+        converged = ss.n == E.n &&
+          ss.hiSum.compareTo(E.hiSum) == 0 &&
+          ss.loSum.compareTo(E.loSum) == 0 &&
+          ss.df.except(E.df).isEmpty
+        // the superseded round is dead once `ss` materializes; release
+        // its blocks NOW instead of at the next full GC — N rounds would
+        // otherwise hold N edge snapshots in block-manager memory
+        release(E)
+        E = ss
+        iter += 1
+      }
+      // terminal state: per component, a star centered at the minimum id
+      // — every non-center node has exactly the edge (node, center). The
+      // groupBy(min) is belt-and-braces for a maxIter cutoff; centers
+      // label themselves via the left-join fallback. MATERIALIZED once:
+      // callers re-read the cluster table from several downstream plan
+      // sites, and without this the labeling join would re-execute per
+      // action.
+      val labels = nodes
+        .join(E.df.groupBy(col("hi").as("id")).agg(min(col("lo")).as("lbl")),
+          Seq("id"), "left")
+        .select(col("id").as("doc_id"),
+          coalesce(col("lbl"), col("id")).as("cluster_id"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      labels.count()
+      val out = labels.sparkSession.createDataFrame(labels.rdd, labels.schema)
+      // everything the loop touched is dead now that the label table is
+      // cached: the raw-edge/node checkpoints and the final round frame
+      releaseCheckpoint(e)
+      releaseCheckpoint(nodes)
       release(E)
-      E = ss
-      iter += 1
+      out
     }
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      System.err.println(s"[cc] tier=dist rounds=$iter edges=${E.n} " +
-        s"edgeGenSec=${(ccT1 - ccT0) / 1e9} " +
-        s"roundsSec=${(System.nanoTime() - ccT1) / 1e9}")
-    // terminal state: per component, a star centered at the minimum id
-    // — every non-center node has exactly the edge (node, center). The
-    // groupBy(min) is belt-and-braces for a maxIter cutoff; centers
-    // label themselves via the left-join fallback. MATERIALIZED once:
-    // callers re-read the cluster table from several downstream plan
-    // sites, and without this the labeling join would re-execute per
-    // action.
-    val labels = nodes
-      .join(E.df.groupBy(col("hi").as("id")).agg(min(col("lo")).as("lbl")),
-        Seq("id"), "left")
-      .select(col("id").as("doc_id"),
-        coalesce(col("lbl"), col("id")).as("cluster_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    labels.count()
-    val out = labels.sparkSession.createDataFrame(labels.rdd, labels.schema)
-    // everything the loop touched is dead now that the label table is
-    // cached: the raw-edge/node checkpoints and the final round frame
-    releaseCheckpoint(e)
-    releaseCheckpoint(nodes)
-    release(E)
-    out
   }
 
-  /** The dedup family's terminal artifact: candidate pairs from ALL
-    * THREE near-dup detectors (d2 word MinHash ∪ d5 SimHash ∪ d7
-    * char-gram MinHash) resolved into duplicate clusters, with a
-    * keep/drop flag — keep the component's min doc_id, drop the rest.
-    * The d7 edges are what make the resolution cross-lingual: a CJK
-    * near-dup pair produces no word-shingle or token-hash overlap
-    * (both see one giant "word"), so without them it would survive
-    * [[dedupApply]]. Docs in no candidate pair are implicitly kept
-    * (they'd be |corpus| singleton rows; the keep/drop list only needs
-    * the docs dedup touches).
-    */
   /** The three-detector candidate edge list over an arbitrary corpus
     * frame — the composed pipeline's dedup input.
     */
@@ -1092,6 +1057,17 @@ object Dedup {
         signaturesFromHashed(charShingleHashesOf(docs), CharSampleMod),
         dedupe = false))
 
+  /** The dedup family's terminal artifact: candidate pairs from ALL
+    * THREE near-dup detectors (d2 word MinHash ∪ d5 SimHash ∪ d7
+    * char-gram MinHash) resolved into duplicate clusters, with a
+    * keep/drop flag — keep the component's min doc_id, drop the rest.
+    * The d7 edges are what make the resolution cross-lingual: a CJK
+    * near-dup pair produces no word-shingle or token-hash overlap
+    * (both see one giant "word"), so without them it would survive
+    * [[dedupApply]]. Docs in no candidate pair are implicitly kept
+    * (they'd be |corpus| singleton rows; the keep/drop list only needs
+    * the docs dedup touches).
+    */
   def dedupClusters(s: SparkSession, dir: String): DataFrame = {
     connectedComponents(dedupEdgesOf(Tables.load(s, dir, "documents")))
       .withColumn("keep",

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.LongType
-import graft.core.Tables
+import graft.core.{DriverTier, Tables}
 
 /** Text-analysis operators for a large-scale training-data pipeline
   * (SURVEY §4.3 north-star): token stats, quality scoring, language ID,
@@ -871,38 +871,26 @@ object TextAnalysis {
       k: Int = BpeMergeCount): Seq[BpeMerge] =
     trainBpeFrom(bpeWordTable(s, dir), k)
 
-  /** Vocab-size cutover between the driver trainer and the distributed
-    * merge loop — the [[graft.llm.Dedup.CcDriverMaxEdges]] discipline
-    * applied to BPE: a distinct-word table under 2²⁰ rows is a few tens
-    * of MB of (word, count) pairs — broadcast-scale driver state — and
-    * training on it is a tight in-memory loop instead of 2·K Spark jobs
-    * whose per-job scheduling floor dominates at every realistic K
-    * (r15: the K=10 fixture loop spent ~1.5 s on ~21 jobs over a
-    * 31-row table). Real vocabularies are low millions of rows, so
-    * even 100 TB corpora usually land under the cutover once the
-    * corpus has collapsed to its distinct words; the distributed loop
-    * is the correctness backstop, spec-pinned merge-identical.
+  /** The [[trainBpe]] core over an arbitrary (w, cnt) word table. A
+    * table of at most [[graft.core.DriverTier.BpeDriverMaxVocab]] rows
+    * trains on the driver; larger ones run the distributed merge loop.
     */
-  val BpeDriverMaxVocab: Long = 1L << 20
-
   def trainBpeFrom(wordsIn: DataFrame, k: Int,
-      driverMaxVocab: Long = BpeDriverMaxVocab): Seq[BpeMerge] = {
-    var words = wordsIn.localCheckpoint(true)
-    if (words.count() <= driverMaxVocab) {
-      // DRIVER TIER: replicate the distributed loop's exact semantics
-      // over the collected (w, cnt) rows —
-      //  * pair counts: adjacent symbols of split(trim(w), " "),
-      //    weighted by cnt (bpePairCounts);
-      //  * argmax: greatest n, ties by (a, b) ascending in UTF-8 byte
-      //    order (Spark string ORDER BY is binary over UTF-8 — Java
-      //    String.compareTo is UTF-16 and diverges on supplementary
-      //    characters, so compare encoded bytes);
-      //  * rewrite: literal " a b " → " ab " applied twice —
-      //    String.replace is the same leftmost non-overlapping
-      //    all-occurrence replace as Spark's replace().
-      val rows = words.collect()
-        .map(r => (r.getString(0), r.getLong(1)))
-      Dedup.releaseCheckpoint(words)
+      driverMaxVocab: Long = DriverTier.BpeDriverMaxVocab): Seq[BpeMerge] = {
+    val words0 = wordsIn.localCheckpoint(true)
+    // the driver arm replicates the distributed loop's exact semantics
+    // over the collected (w, cnt) rows —
+    //  * pair counts: adjacent symbols of split(trim(w), " "),
+    //    weighted by cnt (bpePairCounts);
+    //  * argmax: greatest n, ties by (a, b) ascending in UTF-8 byte
+    //    order (Spark string ORDER BY is binary over UTF-8 — Java
+    //    String.compareTo is UTF-16 and diverges on supplementary
+    //    characters, so compare encoded bytes);
+    //  * rewrite: literal " a b " → " ab " applied twice —
+    //    String.replace is the same leftmost non-overlapping
+    //    all-occurrence replace as Spark's replace().
+    DriverTier.run(words0, driverMaxVocab, "trainBpeFrom") { rows =>
+      Dedup.releaseCheckpoint(words0)
       def utf8Lt(x: String, y: String): Boolean = {
         val (xb, yb) = (x.getBytes("UTF-8"), y.getBytes("UTF-8"))
         val n = math.min(xb.length, yb.length)
@@ -914,8 +902,8 @@ object TextAnalysis {
         }
         xb.length < yb.length
       }
-      val ws = rows.map(_._1).toArray
-      val cnts = rows.map(_._2)
+      val ws = rows.map(_.getString(0))
+      val cnts = rows.map(_.getLong(1))
       val out = scala.collection.mutable.ArrayBuffer.empty[BpeMerge]
       var step = 1
       var exhausted = false
@@ -950,29 +938,31 @@ object TextAnalysis {
           step += 1
         }
       }
-      return out.toSeq
-    }
-    val out = scala.collection.mutable.ArrayBuffer.empty[BpeMerge]
-    var step = 1
-    var exhausted = false
-    while (step <= k && !exhausted) {
-      val top = bpePairCounts(words)
-        .orderBy(desc("n"), col("a"), col("b")).limit(1).collect()
-      if (top.isEmpty) exhausted = true
-      else {
-        val (a, b, n) =
-          (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
-        out += BpeMerge(step, a, b, a + b, n)
-        val next = words
-          .select(bpeApplyMerge(col("w"), a, b).as("w"), col("cnt"))
-          .localCheckpoint(true)
-        Dedup.releaseCheckpoint(words)
-        words = next
-        step += 1
+      out.toSeq
+    } { _ =>
+      var words = words0
+      val out = scala.collection.mutable.ArrayBuffer.empty[BpeMerge]
+      var step = 1
+      var exhausted = false
+      while (step <= k && !exhausted) {
+        val top = bpePairCounts(words)
+          .orderBy(desc("n"), col("a"), col("b")).limit(1).collect()
+        if (top.isEmpty) exhausted = true
+        else {
+          val (a, b, n) =
+            (top(0).getString(0), top(0).getString(1), top(0).getLong(2))
+          out += BpeMerge(step, a, b, a + b, n)
+          val next = words
+            .select(bpeApplyMerge(col("w"), a, b).as("w"), col("cnt"))
+            .localCheckpoint(true)
+          Dedup.releaseCheckpoint(words)
+          words = next
+          step += 1
+        }
       }
+      Dedup.releaseCheckpoint(words)
+      out.toSeq
     }
-    Dedup.releaseCheckpoint(words)
-    out.toSeq
   }
 
   /** t15 — the learned merge table, oracle-gated: the DuckDB oracle

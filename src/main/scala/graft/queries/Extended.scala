@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.LongType
-import graft.core.Tables
+import graft.core.{DriverTier, Tables}
 
 /** Engine-extension surface (SURVEY §2.4 closing note): join variants,
   * window functions, grouping sets, set ops, JSON access, scalar
@@ -883,9 +883,9 @@ object Extended {
       e0.select(col("dst").as("src"), col("src").as("dst")))
       .localCheckpoint(true)
     // cutover probe skipped (-1): the trade graph is 1.2×10⁶ directed
-    // rows at sf0.1 — already past GraphDriverMaxEdges and growing
-    // with SF — so the probe's count job would be a pure tax on the
-    // distributed path (measured +0.5 s/run, r15)
+    // rows at sf0.1 — already past DriverTier.GraphDriverMaxEdges and
+    // growing with SF — so the probe's count job would be a pure tax on
+    // the distributed path (measured +0.5 s/run, r15)
     pageRankOf(edges, iters = 3, driverMaxEdges = -1L)
   }
 
@@ -894,26 +894,17 @@ object Extended {
     * fixtures.
     */
   def pageRankOf(edges: DataFrame, iters: Int,
-      driverMaxEdges: Long = GraphDriverMaxEdges): DataFrame = {
-    // DRIVER TIER (q66/CC cutover discipline): power-method rounds
-    // over a broadcast-scale edge list are per-round join scheduling,
-    // not arithmetic — and unlike the integer graph cores, the
-    // distributed form's nested iteration plan (no per-round
-    // checkpoint) carries ~12 exchanges at 3 rounds. Double-sum order
-    // differs from the shuffle's partial-sum order by ≤ ~1e-13 after 3
-    // rounds — dead against the 6-dp output grid, the same argument
-    // the cross-engine oracle already rests on. Distributed rounds
-    // remain the at-scale path, spec-pinned rank-identical.
-    // A non-positive cutover skips the probe's count job entirely —
-    // for callers that KNOW their graph exceeds it (q54: measured
-    // +0.5 s/run for the probe alone on its 1.2M-row checkpoint).
-    val nEdges = if (driverMaxEdges > 0) edges.count() else -1L
-    if (nEdges > 0 && nEdges <= driverMaxEdges) {
-      val spark = edges.sparkSession
-      val es = edges.select(col("src"), col("dst")).collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-      // NOT released: `edges` is caller-owned (ADVICE r15 — released
-      // checkpoint blocks are unrecoverable, so only the creator frees)
+      driverMaxEdges: Long = DriverTier.GraphDriverMaxEdges): DataFrame =
+    // power-method rounds over a broadcast-scale edge list are
+    // per-round join scheduling, not arithmetic — and unlike the
+    // integer graph cores, the distributed form's nested iteration plan
+    // (no per-round checkpoint) carries ~12 exchanges at 3 rounds.
+    // Double-sum order differs from the shuffle's partial-sum order by
+    // ≤ ~1e-13 after 3 rounds — dead against the 6-dp output grid, the
+    // same argument the cross-engine oracle already rests on.
+    DriverTier.run(edges.select("src", "dst"), driverMaxEdges,
+        "pageRankOf") { rows =>
+      val es = rows.map(r => (r.getLong(0), r.getLong(1)))
       val deg = new java.util.HashMap[Long, Long]()
       es.foreach { case (u, _) => deg.merge(u, 1L, _ + _) }
       var pr = new java.util.HashMap[Long, Double]()
@@ -933,28 +924,28 @@ object Extended {
         pr = next
         it += 1
       }
+      val spark = edges.sparkSession
       import spark.implicits._
       import scala.jdk.CollectionConverters._
       def r6(x: Double): Double =
         BigDecimal(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      return pr.asScala.toSeq.map { case (n, p) => (n, r6(p)) }
-        .toDF("id", "pr")
+      pr.asScala.toSeq.map { case (n, p) => (n, r6(p)) }.toDF("id", "pr")
+    } { _ =>
+      val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
+        .localCheckpoint(true)
+      var ranks = deg.select(col("src").as("id"), lit(1.0).as("pr"))
+      (1 to iters).foreach { _ =>
+        val contribs = edges.join(deg, "src")
+          .join(ranks, col("src") === col("id"))
+          .select(col("dst"), (col("pr") / col("deg")).as("c"))
+          .groupBy("dst").agg(sum(col("c")).as("in_sum"))
+        ranks = deg.select(col("src").as("id"))
+          .join(contribs, col("id") === col("dst"), "left")
+          .select(col("id"),
+            (lit(0.15) + lit(0.85) * coalesce(col("in_sum"), lit(0.0))).as("pr"))
+      }
+      ranks.select(col("id"), round(col("pr"), 6).as("pr"))
     }
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("deg"))
-      .localCheckpoint(true)
-    var ranks = deg.select(col("src").as("id"), lit(1.0).as("pr"))
-    (1 to iters).foreach { _ =>
-      val contribs = edges.join(deg, "src")
-        .join(ranks, col("src") === col("id"))
-        .select(col("dst"), (col("pr") / col("deg")).as("c"))
-        .groupBy("dst").agg(sum(col("c")).as("in_sum"))
-      ranks = deg.select(col("src").as("id"))
-        .join(contribs, col("id") === col("dst"), "left")
-        .select(col("id"),
-          (lit(0.15) + lit(0.85) * coalesce(col("in_sum"), lit(0.0))).as("pr"))
-    }
-    ranks.select(col("id"), round(col("pr"), 6).as("pr"))
-  }
 
   /** q63 — per-node triangle counts on the co-purchase part graph
     * (parts sharing ≥ 2 orders), via DEGREE-ORDERED ORIENTATION
@@ -1006,38 +997,21 @@ object Extended {
     * wedge-close core of q63, factored out so specs can drive it with
     * arbitrary graphs against a brute-force oracle.
     */
-  /** Edge-row cutover for the graph family's driver tiers (q54, q63,
-    * q68, q69, q71). MEASURED, not copied from the CC cutover: the
-    * driver tier's cost is the edge collect + LocalRelation result
-    * (scales with |E|) against the distributed loop's per-round join
-    * scheduling (flat). At sf0.1/local[32], 1.4×10⁵ directed edge rows
-    * collect fast enough that the driver tier wins ≥ 1.3× (q68/q69/
-    * q71), while 1.2×10⁶ rows lose 2× (q54's trade graph: 1.72 s
-    * distributed vs 3.76 s collected — r15 measurement). 2¹⁸ sits at
-    * the geometric midpoint, on the winning side's shoulder; above it
-    * the relational loops are already the right shape.
-    */
-  val GraphDriverMaxEdges: Long = 1L << 18
-
   def trianglesOf(edgesIn: DataFrame,
-      driverMaxEdges: Long = GraphDriverMaxEdges): DataFrame = {
+      driverMaxEdges: Long = DriverTier.GraphDriverMaxEdges): DataFrame = {
     // materialized ONCE: the edge pipeline (for q63 a lineitem
     // self-join + support aggregate) is read by the degree table, the
     // orientation join, and the final wedge-close verify — without
     // this it executes four times
     val edges = edgesIn.localCheckpoint(true)
-    // DRIVER TIER (the q66/CC cutover discipline): a support-pruned
-    // co-purchase graph under the broadcast-scale budget pays more in
-    // the deg/orientation/wedge joins' per-job scheduling than in
-    // arithmetic (r15: 3,573 edges at sf0.1 behind ~1 s of tiny-data
-    // jobs). Same orientation algorithm, exact integer counts; the
-    // distributed wedge join below stays the at-scale path, spec-pinned
-    // count-identical.
-    val nEdges = edges.count()
-    if (nEdges > 0 && nEdges <= driverMaxEdges) {
-      val spark = edges.sparkSession
-      val es = edges.select(col("u"), col("v")).collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
+    // a support-pruned co-purchase graph under the broadcast-scale
+    // budget pays more in the deg/orientation/wedge joins' per-job
+    // scheduling than in arithmetic (r15: 3,573 edges at sf0.1 behind
+    // ~1 s of tiny-data jobs). Same orientation algorithm, exact
+    // integer counts.
+    DriverTier.run(edges.select("u", "v"), driverMaxEdges,
+        "trianglesOf") { rows =>
+      val es = rows.map(r => (r.getLong(0), r.getLong(1)))
       graft.llm.Dedup.releaseCheckpoint(edges)
       val deg = new java.util.HashMap[Long, Long]()
       es.foreach { case (u, v) =>
@@ -1076,32 +1050,33 @@ object Extended {
           i += 1
         }
       }
+      val spark = edges.sparkSession
       import spark.implicits._
       import scala.jdk.CollectionConverters._
-      return tri.asScala.toSeq.map { case (n, c) => (n, c) }
-        .toDF("node", "n_tri")
+      tri.asScala.toSeq.toDF("node", "n_tri")
+    } { _ =>
+      val deg = edges.select(col("u").as("n"))
+        .union(edges.select(col("v").as("n")))
+        .groupBy("n").agg(count(lit(1)).as("d"))
+      val ori = edges
+        .join(deg.select(col("n").as("u"), col("d").as("du")), "u")
+        .join(deg.select(col("n").as("v"), col("d").as("dv")), "v")
+        .select(
+          when(col("du") < col("dv") ||
+               (col("du") === col("dv") && col("u") < col("v")),
+            col("u")).otherwise(col("v")).as("s"),
+          when(col("du") < col("dv") ||
+               (col("du") === col("dv") && col("u") < col("v")),
+            col("v")).otherwise(col("u")).as("tt"))
+      val wedges = ori.as("e1").join(ori.as("e2"),
+          col("e2.s") === col("e1.s") && col("e2.tt") > col("e1.tt"))
+        .select(col("e1.s").as("apex"),
+          least(col("e1.tt"), col("e2.tt")).as("u"),
+          greatest(col("e1.tt"), col("e2.tt")).as("v"))
+      val tris = wedges.join(edges, Seq("u", "v"))
+      tris.select(explode(array(col("apex"), col("u"), col("v"))).as("node"))
+        .groupBy("node").agg(count(lit(1)).as("n_tri"))
     }
-    val deg = edges.select(col("u").as("n"))
-      .union(edges.select(col("v").as("n")))
-      .groupBy("n").agg(count(lit(1)).as("d"))
-    val ori = edges
-      .join(deg.select(col("n").as("u"), col("d").as("du")), "u")
-      .join(deg.select(col("n").as("v"), col("d").as("dv")), "v")
-      .select(
-        when(col("du") < col("dv") ||
-             (col("du") === col("dv") && col("u") < col("v")),
-          col("u")).otherwise(col("v")).as("s"),
-        when(col("du") < col("dv") ||
-             (col("du") === col("dv") && col("u") < col("v")),
-          col("v")).otherwise(col("u")).as("tt"))
-    val wedges = ori.as("e1").join(ori.as("e2"),
-        col("e2.s") === col("e1.s") && col("e2.tt") > col("e1.tt"))
-      .select(col("e1.s").as("apex"),
-        least(col("e1.tt"), col("e2.tt")).as("u"),
-        greatest(col("e1.tt"), col("e2.tt")).as("v"))
-    val tris = wedges.join(edges, Seq("u", "v"))
-    tris.select(explode(array(col("apex"), col("u"), col("v"))).as("node"))
-      .groupBy("node").agg(count(lit(1)).as("n_tri"))
   }
 
   /** q66 — k-core decomposition of the q63 co-purchase graph: peel
@@ -1127,34 +1102,31 @@ object Extended {
     * Scale shape: each round is one degree aggregation (shuffle on
     * node id, map-side partial counts) plus two semi-join prunes, the
     * Pregel peel step expressed relationally; the edge set is
-    * localCheckpointed per round, truncating lineage exactly like the
-    * BPE trainer's merge loop — without it the plan tree triples per
-    * round (the degree subtree embeds the previous round twice). At
+    * persisted and rebuilt from its RDD per round, cutting the plan
+    * like the BPE trainer's per-pass checkpoint — without it the plan
+    * tree triples per round (the degree subtree embeds the previous
+    * round twice). At
     * 100 TB each round's working set only ever SHRINKS, and a
     * converged round is a join against an unchanged node list.
     */
-  def kcoreOf(edges: DataFrame, k: Int, iters: Int): DataFrame = {
+  def kcoreOf(edges: DataFrame, k: Int, iters: Int,
+      driverMaxEdges: Long = DriverTier.CcDriverMaxEdges): DataFrame = {
     // persist-then-count materializes each round's edge frame AND
-    // measures it in ONE job (the CC snap pattern); the rebuilt
-    // LogicalRDD resets carried stats so per-round planning stays flat
-    def snap(df: DataFrame): (DataFrame, DataFrame, Long) = {
-      val c = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val n = c.count()
-      (c.sparkSession.createDataFrame(c.rdd, c.schema), c, n)
-    }
-    var (e, eu, prev) = snap(edges)
-    // DRIVER TIER (the CC precedent): a peel graph under the
-    // broadcast-scale budget pays more in per-round job scheduling
-    // than in arithmetic — run the SAME synchronous rounds locally.
-    // The result is identical: each round drops edges with an
-    // endpoint of degree < k, bounded by `iters`, early exit at the
-    // fixpoint (the peel only removes, so an unchanged count is an
-    // unchanged set).
-    if (prev > 0 && prev <= graft.llm.Dedup.CcDriverMaxEdges) {
-      val spark = e.sparkSession
-      var cur = e.select("u", "v").collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-      eu.unpersist(false)
+    // measures it in ONE job (the CC snap pattern; round 0's count is
+    // the tier gate's); the rebuilt LogicalRDD resets carried stats so
+    // per-round planning stays flat
+    def persisted(df: DataFrame): DataFrame =
+      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    def rebuilt(c: DataFrame): DataFrame =
+      c.sparkSession.createDataFrame(c.rdd, c.schema)
+    val eu0 = persisted(edges.select("u", "v"))
+    // the driver arm runs the SAME synchronous rounds locally: each
+    // round drops edges with an endpoint of degree < k, bounded by
+    // `iters`, early exit at the fixpoint (the peel only removes, so an
+    // unchanged count is an unchanged set)
+    DriverTier.run(eu0, driverMaxEdges, "kcoreOf") { rows =>
+      eu0.unpersist(false)
+      var cur = rows.map(r => (r.getLong(0), r.getLong(1)))
       var round = 0
       var done = cur.isEmpty
       while (round < iters && !done) {
@@ -1172,36 +1144,37 @@ object Extended {
       cur.foreach { case (u, v) =>
         deg.merge(u, 1L, _ + _); deg.merge(v, 1L, _ + _)
       }
+      val spark = edges.sparkSession
       import spark.implicits._
       import scala.jdk.CollectionConverters._
-      return deg.asScala.toSeq.map { case (n, d) => (n, d) }
-        .toDF("n", "deg")
+      deg.asScala.toSeq.toDF("n", "deg")
+    } { n0 =>
+      var (e, eu, prev) = (rebuilt(eu0), eu0, n0)
+      var round = 0
+      var converged = prev == 0
+      while (round < iters && !converged) {
+        val good = e.select(col("u").as("n"))
+          .union(e.select(col("v").as("n")))
+          .groupBy("n").agg(count(lit(1)).as("d"))
+          .filter(col("d") >= k).select("n")
+        val eu2 = persisted(e
+          .join(good.withColumnRenamed("n", "u"), "u")
+          .join(good.withColumnRenamed("n", "v"), "v")
+          .select("u", "v"))
+        val n = eu2.count()
+        eu.unpersist(false)
+        e = rebuilt(eu2); eu = eu2
+        // the peel only ever REMOVES edges, so an unchanged count IS an
+        // unchanged edge set: the remaining fixed rounds are identity
+        // and skipping them returns exactly what the oracle's full
+        // replay computes
+        converged = n == prev
+        prev = n
+        round += 1
+      }
+      e.select(col("u").as("n")).union(e.select(col("v").as("n")))
+        .groupBy("n").agg(count(lit(1)).as("deg"))
     }
-    var round = 0
-    var converged = prev == 0
-    while (round < iters && !converged) {
-      val good = e.select(col("u").as("n"))
-        .union(e.select(col("v").as("n")))
-        .groupBy("n").agg(count(lit(1)).as("d"))
-        .filter(col("d") >= k).select("n")
-      val (e2, eu2, n) = snap(e
-        .join(good.withColumnRenamed("n", "u"), "u")
-        .join(good.withColumnRenamed("n", "v"), "v")
-        .select("u", "v"))
-      eu.unpersist(false)
-      e = e2; eu = eu2
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        System.err.println(s"[kcore] round=${round + 1} edges=$n")
-      // the peel only ever REMOVES edges, so an unchanged count IS an
-      // unchanged edge set: the remaining fixed rounds are identity
-      // and skipping them returns exactly what the oracle's full
-      // replay computes
-      converged = n == prev
-      prev = n
-      round += 1
-    }
-    e.select(col("u").as("n")).union(e.select(col("v").as("n")))
-      .groupBy("n").agg(count(lit(1)).as("deg"))
   }
 
   /** q64 — deterministic FIXED-SIZE per-group sample: the k=10 orders
@@ -1328,20 +1301,13 @@ object Extended {
     * (node) seed frame — spec entry point for brute-force fixtures.
     */
   def bfsLevelsOf(edges: DataFrame, seeds: DataFrame, depth: Int,
-      driverMaxEdges: Long = GraphDriverMaxEdges): DataFrame = {
-    // DRIVER TIER (q66/CC cutover discipline): the per-round
-    // frontier-join/anti-join jobs are scheduling floor on a
-    // broadcast-scale graph; the BFS itself is exact integer work.
-    // Distributed rounds below remain the at-scale path.
-    // Probe with a count only (pageRankOf's pattern, ADVICE r15): the
-    // caller owns `edges` (q68 passes an eager checkpoint) — a second
-    // localCheckpoint here paid a full materialization the distributed
-    // branch never read and leaked its blocks until driver GC.
-    val nEdges = if (driverMaxEdges > 0) edges.count() else -1L
-    if (nEdges > 0 && nEdges <= driverMaxEdges) {
-      val spark = edges.sparkSession
+      driverMaxEdges: Long = DriverTier.GraphDriverMaxEdges): DataFrame =
+    // the per-round frontier-join/anti-join jobs are scheduling floor
+    // on a broadcast-scale graph; the BFS itself is exact integer work
+    DriverTier.run(edges.select("src", "dst"), driverMaxEdges,
+        "bfsLevelsOf") { rows =>
       val adj = new java.util.HashMap[Long, scala.collection.mutable.ArrayBuffer[Long]]()
-      edges.select(col("src"), col("dst")).collect().foreach { r =>
+      rows.foreach { r =>
         adj.computeIfAbsent(r.getLong(0), _ =>
           scala.collection.mutable.ArrayBuffer.empty[Long]) += r.getLong(1)
       }
@@ -1362,27 +1328,27 @@ object Extended {
         frontier = next.toSeq
         i += 1
       }
+      val spark = edges.sparkSession
       import spark.implicits._
       import scala.jdk.CollectionConverters._
-      return lvl.asScala.toSeq.map { case (n, l) => (n, l) }
-        .toDF("node", "lvl")
+      lvl.asScala.toSeq.toDF("node", "lvl")
+    } { _ =>
+      // .distinct() matches the driver tier's seed dedup (ADVICE r15:
+      // duplicate-seed input produced different row multisets per tier);
+      // the seed set is frontier-sized, so the dedup exchange is tiny
+      var visited = seeds.select(col("node")).distinct()
+        .withColumn("lvl", lit(0L))
+        .localCheckpoint(true)
+      for (i <- 1 to depth) {
+        val frontier = visited.filter(col("lvl") === (i - 1))
+          .join(edges, col("node") === col("src"))
+          .select(col("dst").as("node")).distinct()
+          .join(visited.select("node"), Seq("node"), "left_anti")
+          .withColumn("lvl", lit(i.toLong))
+        visited = visited.unionByName(frontier).localCheckpoint(true)
+      }
+      visited
     }
-    // .distinct() matches the driver tier's seed dedup (ADVICE r15:
-    // duplicate-seed input produced different row multisets per tier);
-    // the seed set is frontier-sized, so the dedup exchange is tiny
-    var visited = seeds.select(col("node")).distinct()
-      .withColumn("lvl", lit(0L))
-      .localCheckpoint(true)
-    for (i <- 1 to depth) {
-      val frontier = visited.filter(col("lvl") === (i - 1))
-        .join(edges, col("node") === col("src"))
-        .select(col("dst").as("node")).distinct()
-        .join(visited.select("node"), Seq("node"), "left_anti")
-        .withColumn("lvl", lit(i.toLong))
-      visited = visited.unionByName(frontier).localCheckpoint(true)
-    }
-    visited
-  }
 
   /** q69 — weighted single-source shortest paths over the same trade
     * graph as q68, edge weight `min(l_quantity) − 40` per trade pair
@@ -1422,18 +1388,13 @@ object Extended {
     * spec entry point for brute-force fixtures.
     */
   def ssspOf(edges: DataFrame, seeds: DataFrame, rounds: Int,
-      driverMaxEdges: Long = GraphDriverMaxEdges): DataFrame = {
-    // DRIVER TIER (q66/CC cutover discipline): synchronous Bellman–Ford
-    // over exact longs — dist after round i is the min cost over paths
-    // of ≤ i edges, identical to the relational rounds below, which
-    // stay the at-scale path.
-    // probe with a count only on the caller-owned frame (ADVICE r15 —
-    // the extra eager checkpoint was dead weight on the at-scale path)
-    val nEdges = if (driverMaxEdges > 0) edges.count() else -1L
-    if (nEdges > 0 && nEdges <= driverMaxEdges) {
-      val spark = edges.sparkSession
-      val es = edges.select(col("src"), col("dst"), col("w")).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+      driverMaxEdges: Long = DriverTier.GraphDriverMaxEdges): DataFrame =
+    // synchronous Bellman–Ford over exact longs — dist after round i is
+    // the min cost over paths of ≤ i edges, identical to the relational
+    // rounds
+    DriverTier.run(edges.select("src", "dst", "w"), driverMaxEdges,
+        "ssspOf") { rows =>
+      val es = rows.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       var dist = new java.util.HashMap[Long, Long]()
       seeds.select(col("node")).collect()
         .foreach(r => dist.put(r.getLong(0), 0L))
@@ -1452,22 +1413,22 @@ object Extended {
         dist = next
         i += 1
       }
+      val spark = edges.sparkSession
       import spark.implicits._
       import scala.jdk.CollectionConverters._
-      return dist.asScala.toSeq.map { case (n, d) => (n, d) }
-        .toDF("node", "dist")
-    }
-    var dist = seeds.select(col("node"), lit(0L).as("dist"))
-      .localCheckpoint(true)
-    for (_ <- 1 to rounds) {
-      val relaxed = dist.join(edges, col("node") === col("src"))
-        .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
-      dist = dist.unionByName(relaxed)
-        .groupBy("node").agg(min(col("dist")).as("dist"))
+      dist.asScala.toSeq.toDF("node", "dist")
+    } { _ =>
+      var dist = seeds.select(col("node"), lit(0L).as("dist"))
         .localCheckpoint(true)
+      for (_ <- 1 to rounds) {
+        val relaxed = dist.join(edges, col("node") === col("src"))
+          .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
+        dist = dist.unionByName(relaxed)
+          .groupBy("node").agg(min(col("dist")).as("dist"))
+          .localCheckpoint(true)
+      }
+      dist
     }
-    dist
-  }
 
   /** Histogram bin count for q67 — 256 equi-width bins bound the
     * interpolation error of any quantile estimate by one bin width.

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.LongType
-import graft.core.Tables
+import graft.core.{DriverTier, Tables}
 
 /** Pattern-mining operators a training-data curation pipeline runs at
   * corpus scale: association rules over co-occurrence baskets
@@ -124,21 +124,15 @@ object Mining {
     * entry point for hand-built fixtures.
     */
   def labelPropagate(edges: DataFrame, rounds: Int,
-      driverMaxEdges: Long = graft.queries.Extended.GraphDriverMaxEdges)
-      : DataFrame = {
-    // DRIVER TIER (q66/CC cutover discipline): synchronous rounds over
-    // exact longs — per round, node x's new label is the most frequent
-    // label among its in-neighbors (edges src→x), ties to the SMALLEST
-    // label, exactly the window argmax below; nodes receiving no votes
-    // drop out (the inner join's semantics). Distributed rounds stay
-    // the at-scale path, spec-pinned label-identical.
-    // probe with a count only on the caller-owned frame (ADVICE r15 —
-    // the extra eager checkpoint was dead weight on the at-scale path)
-    val nEdges = if (driverMaxEdges > 0) edges.count() else -1L
-    if (nEdges > 0 && nEdges <= driverMaxEdges) {
-      val spark = edges.sparkSession
-      val es = edges.select(col("src"), col("dst")).collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
+      driverMaxEdges: Long = DriverTier.GraphDriverMaxEdges): DataFrame =
+    // synchronous rounds over exact longs — per round, node x's new
+    // label is the most frequent label among its in-neighbors (edges
+    // src→x), ties to the SMALLEST label, exactly the window argmax of
+    // the relational rounds; nodes receiving no votes drop out (the
+    // inner join's semantics)
+    DriverTier.run(edges.select("src", "dst"), driverMaxEdges,
+        "labelPropagate") { rows =>
+      val es = rows.map(r => (r.getLong(0), r.getLong(1)))
       var lbl = new java.util.HashMap[Long, Long]()
       es.foreach { case (s0, _) => lbl.putIfAbsent(s0, s0) }
       var round = 0
@@ -168,28 +162,28 @@ object Mining {
         lbl = next
         round += 1
       }
+      val spark = edges.sparkSession
       import spark.implicits._
       import scala.jdk.CollectionConverters._
-      return lbl.asScala.toSeq.map { case (n, l) => (n, l) }
-        .toDF("node", "lbl")
-    }
-    var labels = edges.select(col("src").as("node")).distinct()
-      .withColumn("lbl", col("node"))
-      .localCheckpoint(true)
-    val byVotes = Window.partitionBy("node")
-      .orderBy(col("c").desc, col("lbl").asc)
-    for (_ <- 1 to rounds) {
-      labels = labels.join(edges, col("node") === col("src"))
-        .groupBy(col("dst").as("node2"), col("lbl"))
-        .agg(count(lit(1)).as("c"))
-        .withColumnRenamed("node2", "node")
-        .withColumn("rn", row_number().over(byVotes))
-        .filter(col("rn") === 1)
-        .select("node", "lbl")
+      lbl.asScala.toSeq.toDF("node", "lbl")
+    } { _ =>
+      var labels = edges.select(col("src").as("node")).distinct()
+        .withColumn("lbl", col("node"))
         .localCheckpoint(true)
+      val byVotes = Window.partitionBy("node")
+        .orderBy(col("c").desc, col("lbl").asc)
+      for (_ <- 1 to rounds) {
+        labels = labels.join(edges, col("node") === col("src"))
+          .groupBy(col("dst").as("node2"), col("lbl"))
+          .agg(count(lit(1)).as("c"))
+          .withColumnRenamed("node2", "node")
+          .withColumn("rn", row_number().over(byVotes))
+          .filter(col("rn") === 1)
+          .select("node", "lbl")
+          .localCheckpoint(true)
+      }
+      labels
     }
-    labels
-  }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q70_assoc_rules" -> q70AssocRules _,

@@ -12,18 +12,16 @@ object Explain {
     spark.sparkContext.setLogLevel("ERROR")
     val names =
       if (args.nonEmpty) args.toSeq else graft.SparkEntry.queries.keys.toSeq.sorted
-    // SPARK_GRAFT_RAW=1: print the executedPlan.toString with Bench's
-    // v1 normalization applied — the exact string the plan fingerprint
-    // hashes, for diffing when a fingerprint drifts unexpectedly.
+    // SPARK_GRAFT_RAW=1: print the executedPlan.toString through
+    // Bench.normalizeV1, the normalization the v1 plan fingerprint
+    // applies, for diffing when a fingerprint drifts unexpectedly.
     val raw = sys.env.get("SPARK_GRAFT_RAW").contains("1")
     names.foreach { q =>
       println(s"===== $q =====")
       val df = graft.SparkEntry.queries(q)(spark, dir)
       if (raw)
-        println(df.queryExecution.executedPlan.toString
-          .replaceAll("#\\d+", "#")
-          .replaceAll("plan_id=\\d+", "plan_id=")
-          .replaceAll("file:[^\\],\\s)]+", "file:"))
+        println(graft.Bench.normalizeV1(
+          df.queryExecution.executedPlan.toString))
       else df.explain("formatted")
     }
     spark.stop()

@@ -3,7 +3,8 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 
 /** Ad-hoc profiling entry: run one registered query N times against a
-  * testdata dir, print count + wall time per run. Usage:
+  * testdata dir, print count + wall time per run and every driver-tier
+  * decision the query makes. Usage:
   *   tools/run_class.sh graft.tools.Probe <sfDir> <queryName> [runs]
   */
 object Probe {
@@ -12,6 +13,9 @@ object Probe {
     val runs = if (args.length > 2) args(2).toInt else 2
     val spark = graft.core.Session.local()
     spark.sparkContext.setLogLevel("WARN")
+    // every driver-tier decision (site, row count, limit, tier)
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "graft.core.DriverTier", org.apache.logging.log4j.Level.INFO)
     // internal probe targets beyond the public query map
     def state(s: SparkSession, d: String) = {
       graft.llm.Dedup.apssState(graft.core.Tables.load(s, d, "documents")

@@ -97,9 +97,9 @@ class DedupSkewSpec extends SparkSpec {
     // the r12 pins proved driver == distributed on fixed fixtures and
     // the real d8 graph; this property pins the CUTOVER itself — the
     // SAME random graph resolved with the threshold set to its exact
-    // canonical edge count (driver tier: E <= max) and to one below
+    // raw pair count (driver tier: rows <= max) and to one below
     // (distributed tier) must label identically, so an off-by-one in
-    // the `E.n <= driverMaxEdges` comparison can never ship silently
+    // the tier comparison can never ship silently
     val graphGen = for {
       nNodes <- Gen.choose(2, 60)
       nEdges <- Gen.choose(1, 120)
@@ -110,16 +110,15 @@ class DedupSkewSpec extends SparkSpec {
     } yield edges
     val prop = Prop.forAll(graphGen) { edges =>
       val df = edges.toDF("doc_a", "doc_b")
-      // canonical edge count = what the tier comparison actually sees
-      val canon = edges.filter(e => e._1 != e._2)
-        .map(e => (math.max(e._1, e._2), math.min(e._1, e._2)))
-        .distinct.size.toLong
+      // raw pair count, duplicates and self-loops included = what the
+      // tier comparison actually sees
+      val raw = edges.size.toLong
       def asMap(d: org.apache.spark.sql.DataFrame) =
         d.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       val atDriver = asMap(Dedup.connectedComponents(df,
-        driverMaxEdges = math.max(canon, 1L)))
+        driverMaxEdges = raw))
       val atDist = asMap(Dedup.connectedComponents(df,
-        driverMaxEdges = math.max(canon - 1L, 0L)))
+        driverMaxEdges = raw - 1L))
       atDriver == atDist
     }
     val res = SCTest.check(

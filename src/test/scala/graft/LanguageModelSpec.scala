@@ -464,6 +464,12 @@ class LanguageModelSpec extends SparkSpec {
     val got = graft.queries.Extended.kcoreOf(edges.toDF("u", "v"), 3, 12)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == want, s"got ${got.size} nodes want ${want.size}")
+    // tier equality: the distributed peel rounds (forced via a -1
+    // cutover) equal the driver tier the fixture takes above
+    val dist = graft.queries.Extended.kcoreOf(edges.toDF("u", "v"), 3, 12,
+        driverMaxEdges = -1L)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(dist == got)
     assert(want.nonEmpty && want.size < n,
       s"fixture degenerate: core has ${want.size} of $n nodes")
   }
