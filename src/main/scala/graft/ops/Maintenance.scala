@@ -232,20 +232,8 @@ object Maintenance {
         unix_timestamp(col("valid_to")).as("valid_to_s"),
         col("is_current"))
 
-  /** q60 — the streaming CDC upsert's apply semantics made ORACLE-
-    * visible (the batch-equivalence specs were previously the only
-    * gate): two deterministic change batches — a full version-1
-    * snapshot, then version-2 updates for every even key — run through
-    * [[graft.streaming.IngestUpsert.processBatch]] into a scratch
-    * bucketed table, with the second batch applied TWICE so the
-    * replay-idempotence contract is inside the gated query itself; the
-    * query returns the table's final state. The oracle is the
-    * semantic definition the sink must converge to: window-latest per
-    * key over the unioned batches.
-    */
   /** q60's two deterministic change batches (full v1 snapshot, v2
-    * updates for even keys) — shared by the gated query and the
-    * bench's phase-timed split so they cannot drift.
+    * updates for even keys).
     */
   private def q60Batches(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
@@ -267,6 +255,17 @@ object Maintenance {
   def cdcScratchPrefix(q: String): String =
     s"graft_${q}_p${ProcessHandle.current().pid()}_"
 
+  /** q60 — the streaming CDC upsert's apply semantics made ORACLE-
+    * visible (the batch-equivalence specs were previously the only
+    * gate): two deterministic change batches — a full version-1
+    * snapshot, then version-2 updates for every even key — run through
+    * [[graft.streaming.IngestUpsert.processBatch]] into a scratch
+    * bucketed table, with the second batch applied TWICE so the
+    * replay-idempotence contract is inside the gated query itself; the
+    * query returns the table's final state. The oracle is the
+    * semantic definition the sink must converge to: window-latest per
+    * key over the unioned batches.
+    */
   def q60CdcUpsert(s: SparkSession, dir: String): DataFrame = {
     val (b1, b2) = q60Batches(s, dir)
     val tmp = java.nio.file.Files.createTempDirectory(cdcScratchPrefix("q60"))
@@ -279,18 +278,7 @@ object Maintenance {
       .select("doc_id", "source", "n_chars", "ver")
   }
 
-  /** q61 — the streaming SCD2 sink's semantics made oracle-visible
-    * (the q60 pattern for the VERSIONED twin): the event log splits at
-    * its temporal midpoint into two CDC batches applied through
-    * [[graft.streaming.IngestScd2.processBatch]] (second batch
-    * replayed), and the final dimension must equal the ONE-SHOT
-    * [[scdType2]] over the whole log — so the oracle is q55's SQL
-    * verbatim. Replay convergence and incremental ≡ batch were
-    * previously spec-only contracts; this row hash-gates both.
-    */
-  /** q61's two CDC batches (event log split at its temporal midpoint)
-    * — shared by the gated query and the bench's phase-timed split.
-    */
+  /** q61's two CDC batches (event log split at its temporal midpoint). */
   private def q61Batches(s: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
     val ev = t(s, dir, "events")
@@ -303,6 +291,15 @@ object Maintenance {
       ev.filter(unix_timestamp(col("ts")) > mid))
   }
 
+  /** q61 — the streaming SCD2 sink's semantics made oracle-visible
+    * (the q60 pattern for the VERSIONED twin): the event log splits at
+    * its temporal midpoint into two CDC batches applied through
+    * [[graft.streaming.IngestScd2.processBatch]] (second batch
+    * replayed), and the final dimension must equal the ONE-SHOT
+    * [[scdType2]] over the whole log — so the oracle is q55's SQL
+    * verbatim. Replay convergence and incremental ≡ batch were
+    * previously spec-only contracts; this row hash-gates both.
+    */
   def q61CdcScd2(s: SparkSession, dir: String): DataFrame = {
     val tmp = java.nio.file.Files.createTempDirectory(cdcScratchPrefix("q61"))
       .resolve("t").toString
@@ -316,46 +313,6 @@ object Maintenance {
         unix_timestamp(col("valid_from")).as("valid_from_s"),
         unix_timestamp(col("valid_to")).as("valid_to_s"),
         col("is_current"))
-  }
-
-  /** Phase-timed CDC apply for the bench artifact (VERDICT r12 ask
-    * #5): the q60/q61 gated queries replay bootstrap + apply + replay
-    * in one opaque number, which reads as a 5× "regression" next to
-    * the amortized in-suite figure. This runs the SAME batches through
-    * the SAME sinks but times each phase separately — `bootstrap` is
-    * the one-time table-creation write, `apply` the steady per-batch
-    * cost a production stream pays per trigger, `replay` the
-    * idempotent re-apply (reads the table, rewrites touched buckets).
-    * Returns (bootstrap_sec, apply_sec, replay_sec).
-    */
-  def cdcPhaseTimings(s: SparkSession, dir: String,
-      scd2: Boolean): (Double, Double, Double) = {
-    def tm(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
-    if (scd2) {
-      val (b1, b2) = q61Batches(s, dir)
-      val tmp = java.nio.file.Files.createTempDirectory(cdcScratchPrefix("q61"))
-        .resolve("t").toString
-      val boot = tm(graft.streaming.IngestScd2
-        .processBatch(b1, tmp, Seq("user_id"), "ts", 8))
-      val ap = tm(graft.streaming.IngestScd2
-        .processBatch(b2, tmp, Seq("user_id"), "ts", 8))
-      val rp = tm(graft.streaming.IngestScd2
-        .processBatch(b2, tmp, Seq("user_id"), "ts", 8))
-      (boot, ap, rp)
-    } else {
-      val (b1, b2) = q60Batches(s, dir)
-      val tmp = java.nio.file.Files.createTempDirectory(cdcScratchPrefix("q60"))
-        .resolve("t").toString
-      val boot = tm(graft.streaming.IngestUpsert
-        .processBatch(b1, tmp, Seq("doc_id"), "ver", 8))
-      val ap = tm(graft.streaming.IngestUpsert
-        .processBatch(b2, tmp, Seq("doc_id"), "ver", 8))
-      val rp = tm(graft.streaming.IngestUpsert
-        .processBatch(b2, tmp, Seq("doc_id"), "ver", 8))
-      (boot, ap, rp)
-    }
   }
 
   /** q62 — incremental JOIN-view maintenance, the join analogue of

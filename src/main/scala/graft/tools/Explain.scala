@@ -12,17 +12,9 @@ object Explain {
     spark.sparkContext.setLogLevel("ERROR")
     val names =
       if (args.nonEmpty) args.toSeq else graft.SparkEntry.queries.keys.toSeq.sorted
-    // SPARK_GRAFT_RAW=1: print the executedPlan.toString through
-    // Bench.normalizeV1, the normalization the v1 plan fingerprint
-    // applies, for diffing when a fingerprint drifts unexpectedly.
-    val raw = sys.env.get("SPARK_GRAFT_RAW").contains("1")
     names.foreach { q =>
       println(s"===== $q =====")
-      val df = graft.SparkEntry.queries(q)(spark, dir)
-      if (raw)
-        println(graft.Bench.normalizeV1(
-          df.queryExecution.executedPlan.toString))
-      else df.explain("formatted")
+      graft.SparkEntry.queries(q)(spark, dir).explain("formatted")
     }
     spark.stop()
   }

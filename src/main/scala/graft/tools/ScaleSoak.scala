@@ -27,11 +27,11 @@ import graft.core.{Session, Tables}
   *    read them; the copy keeps `Tables.all` warmup working).
   *
   * This corpus exists ONLY for the scaling measurement — correctness
-  * stays gated on the driver's own testdata. Output: soak parquet
-  * under the repo's target/ plus `BENCH_SF1.json` with per-query
-  * sf0.1 vs soak medians and the observed scaling factor (data is
-  * `factor`× — a healthy plan lands ≈ factor, a super-linear blowup
-  * lands far above).
+  * stays gated on the shipped testdata. Output, relative to the
+  * working directory: soak parquet under target/ plus
+  * `BENCH_SF1.json` with per-query sf0.1 vs soak medians and the
+  * observed scaling factor (data is `factor`× — a healthy plan lands
+  * ≈ factor, a super-linear blowup lands far above).
   *
   * Usage: ScaleSoak [baseDir] [outDir] [factor] [queryRegex]
   */
@@ -110,8 +110,7 @@ object ScaleSoak {
 
   def main(args: Array[String]): Unit = {
     val baseDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val outDir = if (args.length > 1) args(1)
-      else "/root/repo/target/soak_sf1"
+    val outDir = if (args.length > 1) args(1) else "target/soak_sf1"
     val factor = if (args.length > 2) args(2).toInt else 10
     val regex = if (args.length > 3) args(3)
       else DefaultHeavy.mkString("^(", "|", ")$")
@@ -121,21 +120,14 @@ object ScaleSoak {
 
     buildCorpus(spark, baseDir, outDir, factor)
 
-    def releaseState(): Unit = {
-      val stray = spark.sparkContext.getPersistentRDDs.values
-      spark.catalog.clearCache()
-      stray.foreach(r => try r.unpersist(blocking = true)
-        catch { case _: Throwable => () })
-      System.gc()
-    }
     def timeQuery(fn: (SparkSession, String) => DataFrame, dir: String,
         runs: Int): Seq[Double] =
       (1 to runs).map { _ =>
-        releaseState()
+        graft.Bench.releaseState(spark)
         val t0 = System.nanoTime()
         fn(spark, dir).count()
         val dt = (System.nanoTime() - t0) / 1e9
-        releaseState()
+        graft.Bench.releaseState(spark)
         dt
       }
     def med(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
@@ -172,17 +164,15 @@ object ScaleSoak {
           s""""estimator":"median-of-3-both-sides",""" +
           s""""factor":$factor,"scale":${f3(sc)}""")
       }.toMap
-    // A FILTERED run merges its rows into the existing artifact
-    // instead of shrinking it to the selected queries (a regex probe
-    // used to clobber the committed full-set file); the write is
-    // try-wrapped so a missing SPARK_GRAFT_REPO dir can't kill the
+    // A FILTERED run merges its rows into the existing artifact (in
+    // the working directory) instead of shrinking it to the selected
+    // queries (a regex probe used to clobber the committed full-set
+    // file); the write is try-wrapped so a failed write can't kill the
     // stdout line that carries the same JSON.
-    val repoPath = java.nio.file.Paths.get(
-      sys.env.getOrElse("SPARK_GRAFT_REPO", "/root/repo"))
-      .resolve("BENCH_SF1.json")
+    val artifactPath = java.nio.file.Paths.get("BENCH_SF1.json")
     val prevRows: Map[String, String] =
       try {
-        val txt = java.nio.file.Files.readString(repoPath)
+        val txt = java.nio.file.Files.readString(artifactPath)
         // tolerate pretty-printed files ("name": { ... } with spaces)
         "\"([a-zA-Z0-9_]+)\"\\s*:\\s*(\\{[^{}]*\\})".r.findAllMatchIn(txt)
           .map(m => m.group(1) ->
@@ -208,7 +198,7 @@ object ScaleSoak {
         s""""soak_dir":"$outDir","cpus":$cpus,"queries":{""" +
         merged.toSeq.sortBy(_._1)
           .map { case (k, v) => s""""$k":{$v}""" }.mkString(",") + "}}"
-    try java.nio.file.Files.writeString(repoPath, json + "\n")
+    try java.nio.file.Files.writeString(artifactPath, json + "\n")
     catch { case e: Throwable =>
       System.err.println(s"[soak] artifact write failed: ${e.getMessage}") }
     println(json)

@@ -1,20 +1,48 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.spark.sql.functions._
 
-/** Coverage for the round-13 measurement tooling: the CDC phase split
-  * (the bench's bootstrap-vs-steady instrument) and the ScaleSoak
-  * corpus builder (the sf1 scaling-curve input).
+/** Coverage for the measurement tooling: `Bench.run` and its plan
+  * fingerprint normalization, and the ScaleSoak corpus builder (the
+  * sf1 scaling-curve input).
   */
 class ToolsSpec extends SparkSpec {
 
-  test("cdcPhaseTimings: all six phases run and time positive, both sinks") {
-    for (scd2 <- Seq(false, true)) {
-      val (boot, ap, rp) =
-        graft.ops.Maintenance.cdcPhaseTimings(spark, sfDir, scd2)
-      assert(boot > 0 && ap > 0 && rp > 0,
-        s"scd2=$scd2 phases ($boot, $ap, $rp)")
+  test("Bench.run: one median and one fingerprint per selected query, " +
+      "ANN recall with its floor, and exactly the documented keys") {
+    def cwdState = new java.io.File(".").listFiles()
+      .filter(_.getName.startsWith("BENCH_"))
+      .map(f => f.getName -> f.lastModified).toMap
+    val before = cwdState
+    val selected = Set("q1_filter_project", "s6_knn_lsh")
+    val (detailLine, summaryLine) =
+      Bench.run(spark, sfDir, Some(selected.mkString("^(", "|", ")$")), 1)
+    val mapper = new ObjectMapper()
+    val detail = mapper.readTree(detailLine)
+    val summary = mapper.readTree(summaryLine)
+    def keys(n: JsonNode): Set[String] = n.fieldNames().asScala.toSet
+    assert(keys(summary) == Set("metric", "value", "unit", "bench_schema",
+      "sf", "warmup_sec", "queries"))
+    assert(keys(detail) == Set("fp_method", "sf", "plans_changed",
+      "plans_changed_base", "recall", "recall_floors", "recall_failures",
+      "filtered_recall_sweep", "plans"))
+    assert(keys(summary.get("queries")) == selected)
+    assert(keys(detail.get("plans")) == selected)
+    for (q <- selected) {
+      assert(summary.get("queries").get(q).asDouble > 0, q)
+      assert(detail.get("plans").get(q).asText.matches("[0-9a-f]{12}"), q)
     }
+    assert(keys(detail.get("recall")) == Set("s6_knn_lsh"))
+    val recall = detail.get("recall").get("s6_knn_lsh").asDouble
+    assert(recall >= 0.0 && recall <= 1.0)
+    assert(detail.get("recall_floors").get("s6_knn_lsh").asDouble == 0.85)
+    // a filtered run skips the selectivity sweep and writes no file
+    assert(keys(detail.get("filtered_recall_sweep")).isEmpty)
+    assert(cwdState == before)
+    assert(!spark.sparkContext.isStopped)
   }
 
   test("ScaleSoak.buildCorpus: factor-exact row counts, distinct keys, " +
@@ -86,10 +114,9 @@ class ToolsSpec extends SparkSpec {
 
   test("plan fingerprints ignore per-JVM object identities") {
     // t19–t22's typed aggregators print their object identity, which
-    // differs in every JVM; both fingerprint forms must strip it
+    // differs in every JVM; the fingerprint must strip it
     val a = "ObjectHashAggregate(keys=[], functions=[graft.functions.CmsAggregator$@1aa21319#12])"
     val b = "ObjectHashAggregate(keys=[], functions=[graft.functions.CmsAggregator$@6e4ac3f5#40])"
-    assert(Bench.normalizeV1(a) == Bench.normalizeV1(b))
     assert(Bench.normalize(a) == Bench.normalize(b))
     assert(Bench.normalize(a) != Bench.normalize(a.replace("Cms", "Hll")))
   }
