@@ -60,11 +60,13 @@ object DriverTier {
     * that know their input exceeds any cutover, and specs forcing the
     * distributed arm). Otherwise `df` is counted once: `n <= maxRows`
     * (empty input included) runs `local` over its collected rows, a
-    * larger `n` runs `distributed(n)`.
+    * larger `n` runs `distributed(n)`. The count runs `df`'s own plan
+    * (one job past its stages; `df.count()` adds an aggregate stage),
+    * so it fills a lazy checkpoint the arms then read.
     */
   def run[A](df: DataFrame, maxRows: Long, site: String)
       (local: Array[Row] => A)(distributed: Long => A): A = {
-    val n = if (maxRows > 0) df.count() else -1L
+    val n = if (maxRows > 0) df.queryExecution.toRdd.count() else -1L
     val driver = n >= 0 && n <= maxRows
     log.info(s"site=$site rows=${if (n < 0) "unprobed" else n} " +
       s"limit=$maxRows tier=${if (driver) "driver" else "distributed"}")

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.LongType
-import graft.core.Tables
+import graft.core.{Checkpoint, Tables}
 
 /** End-to-end corpus curation — the composed pipeline a training-data
   * build actually runs (SURVEY §4.3 north-star): score → filter →
@@ -573,7 +573,7 @@ object Curation {
     var prev: Option[DataFrame] = None
     curateFullStaged(s, dir, budget, (_, df) => {
       val cp = df.localCheckpoint(true)
-      prev.foreach(Dedup.releaseCheckpoint)
+      prev.foreach(Checkpoint.release)
       prev = Some(cp)
       cp
     })
@@ -1103,7 +1103,7 @@ object Curation {
     // materialize the 5-row report BEFORE releasing the stage
     // checkpoints it reads; the caller holds only the tiny result
     val materialized = out.localCheckpoint(true)
-    stages.foreach { case (_, cp) => Dedup.releaseCheckpoint(cp) }
+    stages.foreach { case (_, cp) => Checkpoint.release(cp) }
     materialized
   }
 

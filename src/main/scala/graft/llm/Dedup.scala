@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.LongType
-import graft.core.{DriverTier, Tables}
+import graft.core.{Checkpoint, DriverTier, Rounds, Tables}
 import TextAnalysis.hash60
 
 /** Deduplication operators (SURVEY §4.3 north-star) over `documents`:
@@ -467,7 +467,7 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"),
         round(matches.cast("double") / NumHashes, 4).as("jaccard_est"))
       .localCheckpoint(true)
-    finally releaseCheckpoint(sigs)
+    finally Checkpoint.release(sigs)
   }
 
   // -- d4: SimHash ---------------------------------------------------------
@@ -840,22 +840,6 @@ object Dedup {
   }
 
   // -- d8: dedup cluster resolution ----------------------------------------
-  /** The cached RDD behind a `localCheckpoint`ed frame, for explicit
-    * release. Superseded checkpoints are otherwise freed only when the
-    * driver GC collects the Dataset and ContextCleaner notices — on a
-    * large heap that lag lets an iterative loop pile up dead label
-    * snapshots in block-manager memory, evicting live cache. Only call
-    * on checkpoints the returned plan no longer references: the
-    * lineage is truncated, so freed blocks are NOT recomputable.
-    */
-  private def checkpointRdd(df: DataFrame): Option[org.apache.spark.rdd.RDD[_]] =
-    df.queryExecution.analyzed.collectFirst {
-      case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd
-    }
-
-  private[graft] def releaseCheckpoint(df: DataFrame): Unit =
-    checkpointRdd(df).foreach(_.unpersist(false))
-
   /** Connected components over a symmetric-closed candidate edge list:
     * returns (id, cluster_id) with cluster_id = the component's min id.
     * This is the consumer the [[MaxBucket]] star-link guard presumes —
@@ -894,12 +878,9 @@ object Dedup {
     *
     * Scale shape: the vertex set is only docs that appear in some
     * candidate pair — orders of magnitude smaller than the corpus —
-    * and each round shuffles (hi, lo) longs only. Every round's edge
-    * set is persisted and rebuilt from its RDD, so plan size and
-    * planning cost stay O(1) per round, and the superseded round is
-    * released as soon as the next one materializes. Convergence: the
-    * (count, Σhi, Σlo) triple, computed in the snapshot's own job,
-    * screens for an unchanged edge set; only a triple match pays the
+    * and each round shuffles (hi, lo) longs only. The rounds run
+    * through [[graft.core.Rounds]]. Convergence: the round's row count
+    * screens for an unchanged edge set; only a count match pays the
     * exact `except`.
     */
   def connectedComponents(edges: DataFrame, maxIter: Int = 25,
@@ -910,9 +891,9 @@ object Dedup {
     // that's two complete LSH passes over the corpus
     val e = edges.toDF("src", "dst").localCheckpoint(true)
     // gating on the RAW count spares the driver arm the node-list
-    // checkpoint, the canonical-distinct snap and a second collect
+    // checkpoint, round 0 and a second collect
     DriverTier.run(e, driverMaxEdges, "connectedComponents") { pairs =>
-      releaseCheckpoint(e)
+      Checkpoint.release(e)
       val parent = new java.util.HashMap[Long, Long](pairs.length * 2)
       def find(x: Long): Long = {
         var r = x
@@ -946,46 +927,25 @@ object Dedup {
         .union(e.select(col("dst").as("id")))
         .distinct()
         .localCheckpoint(true)
-      // Loop snapshots REBUILD the frame from the materialized RDD (one
-      // Row conversion per read of a two-long frame): a LogicalRDD
-      // otherwise CARRIES its origin plan's size estimate, and in a
-      // self-referential loop that carried estimate SQUARES every round
-      // — join stats multiply child sizes — so by ~round 20 the
-      // sizeInBytes BigInt has millions of digits and the NEXT round's
-      // stats visitor spends minutes on one multiplication. The rebuild
-      // resets the carried estimate to the leaf default, pinning the
-      // per-round planning cost constant. ONE job per snapshot:
-      // persist-then-aggregate materializes the edge frame into cache
-      // AND computes the convergence triple in the same action; unlike
-      // a checkpoint the lineage survives, so an evicted block is
-      // recomputable.
-      case class Snap(df: DataFrame, underlying: DataFrame, n: Long,
-          hiSum: java.math.BigDecimal, loSum: java.math.BigDecimal)
-      def snap(df: DataFrame): Snap = {
-        val c = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val r = c.agg(count(lit(1)),
-          sum(col("hi").cast("decimal(38,0)")),
-          sum(col("lo").cast("decimal(38,0)"))).head()
-        Snap(c.sparkSession.createDataFrame(c.rdd, c.schema), c,
-          r.getLong(0), r.getDecimal(1), r.getDecimal(2))
-      }
-      def release(s: Snap): Unit = s.underlying.unpersist(false)
-      var E = snap(e.filter(col("src") =!= col("dst"))
+      // round 0: the canonical edge set, filled by the first count
+      val e0 = e.filter(col("src") =!= col("dst"))
         .select(greatest(col("src"), col("dst")).as("hi"),
           least(col("src"), col("dst")).as("lo"))
-        .distinct())
-      var converged = E.n == 0L
-      var iter = 0
-      while (!converged && iter < maxIter) {
+        .distinct()
+        .localCheckpoint(false)
+      // fixpoint = the round returned the input edge set: count-equal
+      // + empty one-sided difference ⇒ set equality for distinct sets
+      val last = Rounds.run(e0, maxIter, Some((prev, next) =>
+          next.rows == prev.rows && next.df.except(prev.df).isEmpty)) { (edgeSet, _) =>
         // LARGE-STAR: every node connects its strictly-larger neighbors
         // to the minimum of its closed neighborhood. The symmetric edge
-        // list is two in-memory projections of the cached round frame,
-        // so the whole round plans as ONE job: no intermediate
+        // list is two projections of the materialized round, so the
+        // whole round plans as ONE query: no intermediate
         // materialization, no per-stage distinct (min-aggregation is
         // duplicate-insensitive; only the round output dedupes). New
         // edges (v, m) with v > u ≥ m are canonical by construction.
-        val sym = E.df.select(col("hi").as("u"), col("lo").as("v"))
-          .union(E.df.select(col("lo").as("u"), col("hi").as("v")))
+        val sym = edgeSet.select(col("hi").as("u"), col("lo").as("v"))
+          .union(edgeSet.select(col("lo").as("u"), col("hi").as("v")))
         val lsMin = sym.groupBy("u").agg(min(col("v")).as("mn"))
           .select(col("u"), least(col("mn"), col("u")).as("m"))
         val ls = sym.join(lsMin, "u")
@@ -995,27 +955,13 @@ object Dedup {
         // itself to the minimum of those — edges are already directed
         // large→small (hi, lo), so the neighborhood is one groupBy(hi).
         val ssMin = ls.groupBy("hi").agg(min(col("lo")).as("m"))
-        val ss = snap(ls.join(ssMin, "hi")
+        ls.join(ssMin, "hi")
           .select(explode(array(
             struct(col("hi").as("a"), col("m").as("b")),
             struct(col("lo").as("a"), col("m").as("b")))).as("p"))
           .select(col("p.a").as("hi"), col("p.b").as("lo"))
           .filter(col("hi") =!= col("lo"))
-          .distinct())
-        // fixpoint = the round returned the input edge set. The cheap
-        // (count, Σhi, Σlo) triple screens; only a triple match pays the
-        // exact one-sided except (count-equal + empty difference ⇒ set
-        // equality for distinct sets).
-        converged = ss.n == E.n &&
-          ss.hiSum.compareTo(E.hiSum) == 0 &&
-          ss.loSum.compareTo(E.loSum) == 0 &&
-          ss.df.except(E.df).isEmpty
-        // the superseded round is dead once `ss` materializes; release
-        // its blocks NOW instead of at the next full GC — N rounds would
-        // otherwise hold N edge snapshots in block-manager memory
-        release(E)
-        E = ss
-        iter += 1
+          .distinct()
       }
       // terminal state: per component, a star centered at the minimum id
       // — every non-center node has exactly the edge (node, center). The
@@ -1025,7 +971,7 @@ object Dedup {
       // sites, and without this the labeling join would re-execute per
       // action.
       val labels = nodes
-        .join(E.df.groupBy(col("hi").as("id")).agg(min(col("lo")).as("lbl")),
+        .join(last.groupBy(col("hi").as("id")).agg(min(col("lo")).as("lbl")),
           Seq("id"), "left")
         .select(col("id").as("doc_id"),
           coalesce(col("lbl"), col("id")).as("cluster_id"))
@@ -1033,10 +979,9 @@ object Dedup {
       labels.count()
       val out = labels.sparkSession.createDataFrame(labels.rdd, labels.schema)
       // everything the loop touched is dead now that the label table is
-      // cached: the raw-edge/node checkpoints and the final round frame
-      releaseCheckpoint(e)
-      releaseCheckpoint(nodes)
-      release(E)
+      // cached: the raw-edge/node checkpoints and the rounds' first and
+      // last edge sets
+      Seq(e, nodes, e0, last).foreach(Checkpoint.release)
       out
     }
   }
@@ -1046,7 +991,7 @@ object Dedup {
     */
   def dedupEdgesOf(docs: DataFrame): DataFrame =
     // dedupe = false on all three detectors: the only consumers are
-    // connected components (union-find / the canonical-distinct snap —
+    // connected components (union-find / the canonical-distinct round 0 —
     // both duplicate-insensitive), so the three per-detector distinct
     // exchanges were pure overhead (guide §2.4 "a distinct on data
     // that is already unique" — here, on data about to be re-deduped)

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.LongType
-import graft.core.{DriverTier, Tables}
+import graft.core.{Checkpoint, DriverTier, Tables}
 
 /** Text-analysis operators for a large-scale training-data pipeline
   * (SURVEY §4.3 north-star): token stats, quality scoring, language ID,
@@ -890,7 +890,7 @@ object TextAnalysis {
     //    String.replace is the same leftmost non-overlapping
     //    all-occurrence replace as Spark's replace().
     DriverTier.run(words0, driverMaxVocab, "trainBpeFrom") { rows =>
-      Dedup.releaseCheckpoint(words0)
+      Checkpoint.release(words0)
       def utf8Lt(x: String, y: String): Boolean = {
         val (xb, yb) = (x.getBytes("UTF-8"), y.getBytes("UTF-8"))
         val n = math.min(xb.length, yb.length)
@@ -955,12 +955,12 @@ object TextAnalysis {
           val next = words
             .select(bpeApplyMerge(col("w"), a, b).as("w"), col("cnt"))
             .localCheckpoint(true)
-          Dedup.releaseCheckpoint(words)
+          Checkpoint.release(words)
           words = next
           step += 1
         }
       }
-      Dedup.releaseCheckpoint(words)
+      Checkpoint.release(words)
       out.toSeq
     }
   }

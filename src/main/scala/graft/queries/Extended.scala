@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.LongType
-import graft.core.{DriverTier, Tables}
+import graft.core.{Checkpoint, DriverTier, Rounds, Tables}
 
 /** Engine-extension surface (SURVEY §2.4 closing note): join variants,
   * window functions, grouping sets, set ops, JSON access, scalar
@@ -859,35 +859,49 @@ object Extended {
     *
     * Scale shape per iteration: one equi-join of the edge list
     * against the (id, rank) table + one keyed sum — both map-side
-    * combining, carrying only (id, double). The edge list and degree
-    * table build ONCE (eager checkpoint cuts the join lineage the
-    * three iterations would otherwise replay); an open-ended
-    * convergence loop would checkpoint per pass exactly like the d8
-    * pointer-jumping discipline. Ranks round to 6 dp only at the
-    * END: intermediate sums stay full-precision, so cross-engine
+    * combining, carrying only (id, double). The edge list
+    * ([[tradeEdges]]) and degree table build ONCE; the three rounds
+    * plan as one query, which launches fewer jobs than materializing
+    * each round through [[graft.core.Rounds]] (sf0.01, `local[4]`,
+    * every rank computed: 20 vs 22). Ranks round to 6 dp only at the END:
+    * intermediate sums stay full-precision, so cross-engine
     * summation-order noise (~1e-13 after 3 passes) dies against the
     * 1e-6 grid.
     */
-  def q54PageRank(s: SparkSession, dir: String): DataFrame = {
-    val e0 = t(s, dir, "lineitem")
+  def q54PageRank(s: SparkSession, dir: String): DataFrame =
+    // the edge checkpoint stays cached until the session (or the bench
+    // harness's releaseState) frees it: the returned plan reads it
+    // lazily. Cutover probe skipped (-1): the trade graph is 1.2×10⁶
+    // directed rows at sf0.1 — already past
+    // DriverTier.GraphDriverMaxEdges and growing with SF — so the
+    // probe's count job would be a pure tax on the distributed path
+    // (measured +0.5 s/run, r15)
+    pageRankOf(tradeEdges(s, dir), iters = 3, driverMaxEdges = -1L)
+
+  /** The symmetric supplier↔customer trade graph of q54, q68 and q71:
+    * both directions of every DISTINCT (l_suppkey + 10⁶, o_custkey)
+    * lineitem⋈orders pair (suppliers sit past the customer key
+    * space), from lines with `l_quantity >= minQty` only when given.
+    * Eagerly checkpointed: every round of a graph loop reads it. q68
+    * and q71 (and q69, over its weighted edges) free it once the loop
+    * returns: a driver arm returns collected rows and
+    * [[graft.core.Rounds]] a materialized round, so no result reads it.
+    */
+  private[graft] def tradeEdges(s: SparkSession, dir: String,
+      minQty: Option[Int] = None): DataFrame = {
+    val li = t(s, dir, "lineitem")
+    val e0 = minQty.fold(li)(q => li.filter(col("l_quantity") >= q))
       .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
       .select((col("l_suppkey") + 1000000L).as("src"), col("o_custkey").as("dst"))
       .distinct()
-    // both checkpoints stay cached until the session (or the bench
-    // harness's releaseState) frees them: the returned plan reads
-    // them lazily, and materializing the small result eagerly just to
-    // release them early costs ~1 s through the non-AQE RDD path
-    // (measured) — the d8 release discipline applies when the result
-    // itself is a checkpoint, which this one deliberately is not
-    val edges = e0.unionByName(
-      e0.select(col("dst").as("src"), col("src").as("dst")))
+    e0.unionByName(e0.select(col("dst").as("src"), col("src").as("dst")))
       .localCheckpoint(true)
-    // cutover probe skipped (-1): the trade graph is 1.2×10⁶ directed
-    // rows at sf0.1 — already past DriverTier.GraphDriverMaxEdges and
-    // growing with SF — so the probe's count job would be a pure tax on
-    // the distributed path (measured +0.5 s/run, r15)
-    pageRankOf(edges, iters = 3, driverMaxEdges = -1L)
   }
+
+  /** The q68/q69 seed set: trade-graph sources ≡ 0 mod 500. */
+  private[graft] def tradeSeeds(edges: DataFrame): DataFrame =
+    edges.select(col("src").as("node")).distinct()
+      .filter(col("node") % 500 === 0)
 
   /** The q54 core over arbitrary symmetric (src, dst) edges — `iters`
     * power-method rounds at damping 0.85; spec entry point for tier
@@ -1012,7 +1026,7 @@ object Extended {
     DriverTier.run(edges.select("u", "v"), driverMaxEdges,
         "trianglesOf") { rows =>
       val es = rows.map(r => (r.getLong(0), r.getLong(1)))
-      graft.llm.Dedup.releaseCheckpoint(edges)
+      Checkpoint.release(edges)
       val deg = new java.util.HashMap[Long, Long]()
       es.foreach { case (u, v) =>
         deg.merge(u, 1L, _ + _); deg.merge(v, 1L, _ + _)
@@ -1101,31 +1115,21 @@ object Extended {
     *
     * Scale shape: each round is one degree aggregation (shuffle on
     * node id, map-side partial counts) plus two semi-join prunes, the
-    * Pregel peel step expressed relationally; the edge set is
-    * persisted and rebuilt from its RDD per round, cutting the plan
-    * like the BPE trainer's per-pass checkpoint — without it the plan
-    * tree triples per round (the degree subtree embeds the previous
-    * round twice). At
-    * 100 TB each round's working set only ever SHRINKS, and a
-    * converged round is a join against an unchanged node list.
+    * Pregel peel step expressed relationally, materialized per round
+    * by [[graft.core.Rounds]]. At 100 TB each round's working set only
+    * ever SHRINKS, and a converged round is a join against an
+    * unchanged node list.
     */
   def kcoreOf(edges: DataFrame, k: Int, iters: Int,
       driverMaxEdges: Long = DriverTier.CcDriverMaxEdges): DataFrame = {
-    // persist-then-count materializes each round's edge frame AND
-    // measures it in ONE job (the CC snap pattern; round 0's count is
-    // the tier gate's); the rebuilt LogicalRDD resets carried stats so
-    // per-round planning stays flat
-    def persisted(df: DataFrame): DataFrame =
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def rebuilt(c: DataFrame): DataFrame =
-      c.sparkSession.createDataFrame(c.rdd, c.schema)
-    val eu0 = persisted(edges.select("u", "v"))
+    // round 0, filled by the tier gate's count
+    val eu0 = edges.select("u", "v").localCheckpoint(false)
     // the driver arm runs the SAME synchronous rounds locally: each
     // round drops edges with an endpoint of degree < k, bounded by
     // `iters`, early exit at the fixpoint (the peel only removes, so an
     // unchanged count is an unchanged set)
     DriverTier.run(eu0, driverMaxEdges, "kcoreOf") { rows =>
-      eu0.unpersist(false)
+      Checkpoint.release(eu0)
       var cur = rows.map(r => (r.getLong(0), r.getLong(1)))
       var round = 0
       var done = cur.isEmpty
@@ -1148,30 +1152,21 @@ object Extended {
       import spark.implicits._
       import scala.jdk.CollectionConverters._
       deg.asScala.toSeq.toDF("n", "deg")
-    } { n0 =>
-      var (e, eu, prev) = (rebuilt(eu0), eu0, n0)
-      var round = 0
-      var converged = prev == 0
-      while (round < iters && !converged) {
+    } { _ =>
+      // the peel only ever REMOVES edges, so an unchanged count IS an
+      // unchanged edge set: the remaining fixed rounds are identity
+      // and skipping them returns exactly what the oracle's full
+      // replay computes
+      val e = Rounds.run(eu0, iters, Some(_.rows == _.rows)) { (e, _) =>
         val good = e.select(col("u").as("n"))
           .union(e.select(col("v").as("n")))
           .groupBy("n").agg(count(lit(1)).as("d"))
           .filter(col("d") >= k).select("n")
-        val eu2 = persisted(e
-          .join(good.withColumnRenamed("n", "u"), "u")
+        e.join(good.withColumnRenamed("n", "u"), "u")
           .join(good.withColumnRenamed("n", "v"), "v")
-          .select("u", "v"))
-        val n = eu2.count()
-        eu.unpersist(false)
-        e = rebuilt(eu2); eu = eu2
-        // the peel only ever REMOVES edges, so an unchanged count IS an
-        // unchanged edge set: the remaining fixed rounds are identity
-        // and skipping them returns exactly what the oracle's full
-        // replay computes
-        converged = n == prev
-        prev = n
-        round += 1
+          .select("u", "v")
       }
+      if (e ne eu0) Checkpoint.release(eu0) // iters < 1 returns eu0
       e.select(col("u").as("n")).union(e.select(col("v").as("n")))
         .groupBy("n").agg(count(lit(1)).as("deg"))
     }
@@ -1278,23 +1273,15 @@ object Extended {
     *
     * Scale shape per round: frontier ⋈ edges (keyed equi-join),
     * distinct, anti-join against the visited set — each carries
-    * (long, long) pairs only; visited is localCheckpointed per round
-    * (the q54/d8 iteration discipline), and each round's cost is
+    * (long, long) pairs only; the visited set is materialized per
+    * round by [[graft.core.Rounds]], and each round's cost is
     * O(frontier out-edges), never the whole graph. The oracle unrolls
     * the same three rounds as MATERIALIZED CTEs.
     */
   def q68BfsLevels(s: SparkSession, dir: String): DataFrame = {
-    val e0 = t(s, dir, "lineitem").filter(col("l_quantity") >= 45)
-      .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-      .select((col("l_suppkey") + 1000000L).as("src"),
-        col("o_custkey").as("dst"))
-      .distinct()
-    val edges = e0.unionByName(
-        e0.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint(true)
-    val seeds = edges.select(col("src").as("node")).distinct()
-      .filter(col("node") % 500 === 0)
-    bfsLevelsOf(edges, seeds, depth = 3)
+    val edges = tradeEdges(s, dir, minQty = Some(45))
+    try bfsLevelsOf(edges, tradeSeeds(edges), depth = 3)
+    finally Checkpoint.release(edges)
   }
 
   /** The q68 core over arbitrary directed (src, dst) edges and a
@@ -1336,18 +1323,15 @@ object Extended {
       // .distinct() matches the driver tier's seed dedup (ADVICE r15:
       // duplicate-seed input produced different row multisets per tier);
       // the seed set is frontier-sized, so the dedup exchange is tiny
-      var visited = seeds.select(col("node")).distinct()
-        .withColumn("lvl", lit(0L))
-        .localCheckpoint(true)
-      for (i <- 1 to depth) {
+      val init = seeds.select(col("node")).distinct().withColumn("lvl", lit(0L))
+      Rounds.run(init, depth) { (visited, i) =>
         val frontier = visited.filter(col("lvl") === (i - 1))
           .join(edges, col("node") === col("src"))
           .select(col("dst").as("node")).distinct()
           .join(visited.select("node"), Seq("node"), "left_anti")
           .withColumn("lvl", lit(i.toLong))
-        visited = visited.unionByName(frontier).localCheckpoint(true)
+        visited.unionByName(frontier)
       }
-      visited
     }
 
   /** q69 — weighted single-source shortest paths over the same trade
@@ -1363,10 +1347,10 @@ object Extended {
     * (a shuffle of (long, long) pairs), then a min-combine groupBy —
     * partial aggregation collapses duplicate relaxations map-side, so
     * the shuffle carries one candidate per (partition, node), not one
-    * per in-edge. The distance frame localCheckpoints per round (the
-    * q54/q68 iteration discipline), keeping the plan O(1) deep; at
-    * 1000 executors each round is two narrow shuffles over the
-    * frontier's out-neighborhood, never the whole graph.
+    * per in-edge. The distance frame is materialized per round by
+    * [[graft.core.Rounds]], keeping the plan O(1) deep; at 1000
+    * executors each round is two narrow shuffles over the frontier's
+    * out-neighborhood, never the whole graph.
     */
   def q69Sssp(s: SparkSession, dir: String): DataFrame = {
     val e0 = t(s, dir, "lineitem").filter(col("l_quantity") >= 45)
@@ -1378,9 +1362,8 @@ object Extended {
     val edges = e0.unionByName(
         e0.select(col("dst").as("src"), col("src").as("dst"), col("w")))
       .localCheckpoint(true)
-    val seeds = edges.select(col("src").as("node")).distinct()
-      .filter(col("node") % 500 === 0)
-    ssspOf(edges, seeds, rounds = 4)
+    try ssspOf(edges, tradeSeeds(edges), rounds = 4)
+    finally Checkpoint.release(edges)
   }
 
   /** The q69 core over arbitrary weighted directed (src, dst, w)
@@ -1418,16 +1401,12 @@ object Extended {
       import scala.jdk.CollectionConverters._
       dist.asScala.toSeq.toDF("node", "dist")
     } { _ =>
-      var dist = seeds.select(col("node"), lit(0L).as("dist"))
-        .localCheckpoint(true)
-      for (_ <- 1 to rounds) {
+      Rounds.run(seeds.select(col("node"), lit(0L).as("dist")), rounds) { (dist, _) =>
         val relaxed = dist.join(edges, col("node") === col("src"))
           .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
-        dist = dist.unionByName(relaxed)
+        dist.unionByName(relaxed)
           .groupBy("node").agg(min(col("dist")).as("dist"))
-          .localCheckpoint(true)
       }
-      dist
     }
 
   /** Histogram bin count for q67 — 256 equi-width bins bound the

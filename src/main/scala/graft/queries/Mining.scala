@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.LongType
-import graft.core.{DriverTier, Tables}
+import graft.core.{Checkpoint, DriverTier, Rounds, Tables}
 
 /** Pattern-mining operators a training-data curation pipeline runs at
   * corpus scale: association rules over co-occurrence baskets
@@ -16,8 +16,8 @@ import graft.core.{DriverTier, Tables}
   * Scale shapes: basket pair generation is a per-key self-join whose
   * fanout is bounded by basket size (Σ k_i², never n²); label
   * propagation rounds shuffle (long, long) pairs only with map-side
-  * partial counts, the q54/q68 iteration discipline (localCheckpoint
-  * per round keeps the plan O(1) deep at any round count).
+  * partial counts, each round materialized by [[graft.core.Rounds]]
+  * (the plan stays O(1) deep at any round count).
   */
 object Mining {
 
@@ -105,19 +105,13 @@ object Mining {
     * Scale shape per round: labels ⋈ edges keyed on the edge source
     * (shuffles (long, long) pairs), a counted groupBy with map-side
     * partials, then a per-node window argmax over its ≤ degree label
-    * candidates — state is one long per node, localCheckpointed per
-    * round (q54/q68/q69 discipline).
+    * candidates — state is one long per node, materialized per round
+    * by [[graft.core.Rounds]].
     */
   def q71LabelProp(s: SparkSession, dir: String): DataFrame = {
-    val e0 = t(s, dir, "lineitem").filter(col("l_quantity") >= 45)
-      .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
-      .select((col("l_suppkey") + 1000000L).as("src"),
-        col("o_custkey").as("dst"))
-      .distinct()
-    val edges = e0.unionByName(
-        e0.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint(true)
-    labelPropagate(edges, LpaRounds)
+    val edges = Extended.tradeEdges(s, dir, minQty = Some(45))
+    try labelPropagate(edges, LpaRounds)
+    finally Checkpoint.release(edges)
   }
 
   /** The q71 core over arbitrary symmetric (src, dst) edges — spec
@@ -167,22 +161,19 @@ object Mining {
       import scala.jdk.CollectionConverters._
       lbl.asScala.toSeq.toDF("node", "lbl")
     } { _ =>
-      var labels = edges.select(col("src").as("node")).distinct()
-        .withColumn("lbl", col("node"))
-        .localCheckpoint(true)
       val byVotes = Window.partitionBy("node")
         .orderBy(col("c").desc, col("lbl").asc)
-      for (_ <- 1 to rounds) {
-        labels = labels.join(edges, col("node") === col("src"))
+      val init = edges.select(col("src").as("node")).distinct()
+        .withColumn("lbl", col("node"))
+      Rounds.run(init, rounds) { (labels, _) =>
+        labels.join(edges, col("node") === col("src"))
           .groupBy(col("dst").as("node2"), col("lbl"))
           .agg(count(lit(1)).as("c"))
           .withColumnRenamed("node2", "node")
           .withColumn("rn", row_number().over(byVotes))
           .filter(col("rn") === 1)
           .select("node", "lbl")
-          .localCheckpoint(true)
       }
-      labels
     }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -124,7 +124,7 @@ object IngestScd2 {
         .write.mode(SaveMode.Overwrite)
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("__bucket").parquet(tablePath)
-      finally if (!bootstrap) graft.llm.Dedup.releaseCheckpoint(merged)
+      finally if (!bootstrap) graft.core.Checkpoint.release(merged)
     } finally newVersions.unpersist()
   }
 

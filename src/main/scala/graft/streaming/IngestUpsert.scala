@@ -135,7 +135,7 @@ object IngestUpsert {
         .write.mode(SaveMode.Overwrite)
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("__bucket").parquet(tablePath)
-      finally if (!bootstrap) graft.llm.Dedup.releaseCheckpoint(merged)
+      finally if (!bootstrap) graft.core.Checkpoint.release(merged)
     } finally latest.unpersist()
   }
 

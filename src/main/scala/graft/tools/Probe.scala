@@ -91,22 +91,9 @@ object Probe {
         driverMaxEdges = -1L)),
       "q63_edges" -> ((s, d) =>
         graft.queries.Extended.copurchaseEdges(s, d)),
-      "q54_edges" -> ((s, d) => {
-        import org.apache.spark.sql.functions._
-        val t = (n: String) => graft.core.Tables.load(s, d, n)
-        t("lineitem").join(t("orders"),
-            col("l_orderkey") === col("o_orderkey"))
-          .select((col("l_suppkey") + 1000000L).as("src"),
-            col("o_custkey").as("dst")).distinct()
-      }),
-      "q71_edges" -> ((s, d) => {
-        import org.apache.spark.sql.functions._
-        val t = (n: String) => graft.core.Tables.load(s, d, n)
-        t("lineitem").filter(col("l_quantity") >= 45)
-          .join(t("orders"), col("l_orderkey") === col("o_orderkey"))
-          .select((col("l_suppkey") + 1000000L).as("src"),
-            col("o_custkey").as("dst")).distinct()
-      }),
+      "q54_edges" -> ((s, d) => graft.queries.Extended.tradeEdges(s, d)),
+      "q71_edges" -> ((s, d) =>
+        graft.queries.Extended.tradeEdges(s, d, minQty = Some(45))),
       // c8 stage-boundary timing: prints per-stage wall time through
       // the same eager-checkpoint boundary curateFull uses
       "c8_stages" -> ((s, d) => {
@@ -115,7 +102,7 @@ object Probe {
         val out = graft.llm.Curation.curateFullStaged(s, d, 2000L,
           (name, df) => {
             val cp = df.localCheckpoint(true)
-            prev.foreach(graft.llm.Dedup.releaseCheckpoint)
+            prev.foreach(graft.core.Checkpoint.release)
             prev = Some(cp)
             val now = System.nanoTime()
             System.err.println(

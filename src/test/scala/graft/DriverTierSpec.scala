@@ -75,15 +75,67 @@ class DriverTierSpec extends SparkSpec {
 
   test("the driver arm launches exactly one count and one collect") {
     val df = spark.range(5).toDF("id")
-    // under AQE a count is a shuffle-stage job plus a result job, so
-    // the reference is what a bare count and a bare collect launch
-    val (_, countJobs) = jobsOf("driver-tier-spec-count")(df.count())
+    // the gate counts the frame's own plan: one job here, where
+    // df.count() would add an aggregate stage job under AQE
     val (_, collectJobs) = jobsOf("driver-tier-spec-collect")(df.collect())
     val (tier, jobs) = jobsOf("driver-tier-spec-driver")(tierOf(df, 5L))
     assert(tier.left.exists(_.length == 5))
-    assert(countJobs >= 1 && collectJobs >= 1)
-    assert(jobs == countJobs + collectJobs,
-      s"driver arm launched $jobs jobs; count $countJobs, collect $collectJobs")
+    assert(collectJobs >= 1)
+    assert(jobs == 1 + collectJobs,
+      s"driver arm launched $jobs jobs; one count job, collect $collectJobs")
+  }
+
+  /** One seeded fixture for the six iterative arms: 25 undirected
+    * edges over 20 nodes, given canonically (u < v), symmetrically
+    * (50 directed rows) and weighted. Each arm runs distributed
+    * (cut -1) and its result is collected. */
+  private def graphArms: Seq[(String, () => Array[Row])] = {
+    val rnd = new scala.util.Random(10L)
+    val half = rnd.shuffle((for {
+      u <- 0 until 20; v <- (u + 1) until 20
+    } yield (u.toLong, v.toLong)).toVector).take(25)
+    val sym = (half ++ half.map(e => (e._2, e._1))).toDF("src", "dst")
+    val weighted = (half ++ half.map(e => (e._2, e._1)))
+      .map { case (u, v) => (u, v, (u * 7 + v * 3) % 9 + 1) }
+      .toDF("src", "dst", "w")
+    val seeds = Seq(0L, 7L).toDF("node")
+    Seq[(String, () => DataFrame)](
+      "pageRankOf" -> (() => Extended.pageRankOf(sym, 3, -1L)),
+      "kcoreOf" -> (() => Extended.kcoreOf(half.toDF("u", "v"), 2, 8, -1L)),
+      "bfsLevelsOf" -> (() => Extended.bfsLevelsOf(sym, seeds, 3, -1L)),
+      "ssspOf" -> (() => Extended.ssspOf(weighted, seeds, 4, -1L)),
+      "labelPropagate" -> (() => Mining.labelPropagate(sym, 3, -1L)),
+      "connectedComponents" -> (() => Dedup.connectedComponents(
+        half.toDF("doc_a", "doc_b"), driverMaxEdges = -1L)))
+      .map { case (site, f) => site -> (() => f().collect()) }
+  }
+
+  test("each distributed graph arm launches no more jobs than its pin") {
+    // upper bounds: the job counts these arms launched on this fixture
+    // before they shared one iteration operator
+    val pins = Map("pageRankOf" -> 13, "kcoreOf" -> 37, "bfsLevelsOf" -> 16,
+      "ssspOf" -> 14, "labelPropagate" -> 15, "connectedComponents" -> 45)
+    val seen = graphArms.map { case (site, f) =>
+      val (out, jobs) = jobsOf(s"driver-tier-spec-arm-$site")(f())
+      assert(out.nonEmpty, s"$site returned nothing")
+      site -> jobs
+    }.toMap
+    info(seen.toSeq.sortBy(_._1).mkString(", "))
+    seen.foreach { case (site, jobs) =>
+      assert(jobs <= pins(site), s"$site launched $jobs jobs, pin ${pins(site)}")
+    }
+  }
+
+  test("each distributed graph arm leaves at most one persisted RDD " +
+      "behind its collected result") {
+    val sc = spark.sparkContext
+    graphArms.foreach { case (site, f) =>
+      val before = sc.getPersistentRDDs.size
+      f()
+      val after = sc.getPersistentRDDs.size
+      assert(after <= before + 1,
+        s"$site: $before persisted RDDs before, $after after")
+    }
   }
 
   test("all eight tiered entry points return the same empty result on " +
