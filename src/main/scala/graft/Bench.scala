@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
@@ -29,12 +29,13 @@ object Bench {
     .replaceAll("\\$@[0-9a-f]+", "\\$@")
     .replaceAll("QueryStage \\d+", "QueryStage") // stage ids are volatile
 
-  /** Per-query isolation: queries that checkpoint internally (d8, c8,
-    * s4, …) leave localCheckpoint RDD blocks behind that are otherwise
-    * reclaimed only when driver GC lets ContextCleaner notice — in a
-    * long suite those dead blocks pile up and inflate everything that
-    * runs after them. Explicitly unpersist every leftover persistent
-    * RDD and nudge GC, OUTSIDE any timed region.
+  /** Per-query isolation, OUTSIDE any timed region. A query's scratch
+    * persists and temp dirs are released by its own `core.Scope`; what
+    * is left is the state a lazy result still reads (the
+    * localCheckpoint blocks of d8, c8, s4, …), otherwise reclaimed only
+    * when driver GC lets ContextCleaner notice. In a long suite those
+    * dead blocks pile up and inflate everything that runs after them,
+    * so unpersist every leftover persistent RDD and nudge GC.
     */
   def releaseState(spark: SparkSession): Unit = {
     // covers explicit persists, localCheckpoints, AND materialized
@@ -44,47 +45,30 @@ object Bench {
     spark.catalog.clearCache()
     stray.foreach(r => try r.unpersist(blocking = true)
       catch { case _: Throwable => () })
-    // q60/q61 write bucketed scratch tables under java.io.tmpdir per
-    // execution; a full suite leaves O(runs) table copies of dirty
-    // pages behind, whose writeback taxes whatever runs next — sweep
-    // them once the query that produced them has been consumed. The
-    // prefixes embed OUR pid (Maintenance.cdcScratchPrefix), so a
-    // concurrent Verify/test/bench process on the same box never
-    // loses its live scratch to this sweep.
-    try {
-      val tmpRoot = java.nio.file.Paths
-        .get(System.getProperty("java.io.tmpdir"))
-      val ownPrefixes = Seq("q60", "q61")
-        .map(graft.ops.Maintenance.cdcScratchPrefix)
-      // own scratch always; another process's scratch ONLY when its
-      // pid is dead (a crashed run's dirs would otherwise leak
-      // forever — no one else reclaims them)
-      def deadOwner(name: String): Boolean =
-        "graft_q6[01]_p(\\d+)_".r.findFirstMatchIn(name).exists(m =>
-          !ProcessHandle.of(m.group(1).toLong).isPresent)
-      Option(tmpRoot.toFile.listFiles()).getOrElse(Array.empty)
-        .filter(f => f.isDirectory &&
-          (ownPrefixes.exists(f.getName.startsWith) || deadOwner(f.getName)))
-        .foreach { d =>
-          // per-dir guard: one failed walk/delete (e.g. a concurrent
-          // sweep racing on the same dead dir) must not abandon the
-          // remaining dirs
-          try java.nio.file.Files.walk(d.toPath)
-            .sorted(java.util.Comparator.reverseOrder())
-            .forEach(p => { p.toFile.delete(); () })
-          catch { case _: Throwable => () }
-        }
-    } catch { case _: Throwable => () }
     // GC only when something was actually released — most queries
     // leave nothing, and ~4 forced GCs per query would otherwise
     // dominate the suite's wall-clock without changing any timing
     if (hadState) System.gc()
   }
 
+  /** Builds `query` and runs it into the `noop` sink, which computes
+    * every column of every row; returns the wall seconds of both. A
+    * `count()` lets the optimizer prune columns, and with them joins
+    * that only feed those columns (q54's final `deg ⋈ contribs`). The
+    * one consume rule of Bench, ScaleSoak and Probe; a query that
+    * throws is not timed.
+    */
+  def consume(query: => DataFrame): Double = {
+    val t0 = System.nanoTime()
+    query.write.format("noop").mode("overwrite").save()
+    (System.nanoTime() - t0) / 1e9
+  }
+
   /** Times the queries whose names match `selected` (every query when
     * None), `runs` runs each, and returns (detail, summary) JSON lines.
-    * Reads `BENCH_DETAIL.json` from the working directory as the
-    * fingerprint baseline; writes no file.
+    * A query that throws gets no median: its name and message go under
+    * the detail line's `failed` key. Reads `BENCH_DETAIL.json` from the
+    * working directory as the fingerprint baseline; writes no file.
     */
   def run(spark: SparkSession, sfDir: String, selected: Option[String],
       runs: Int): (String, String) = {
@@ -123,17 +107,17 @@ object Bench {
     // comparability.
     def familyRank(n: String): Int =
       if (n.startsWith("d")) 1 else if (n.startsWith("c")) 2 else 0
+    val failed = scala.collection.mutable.Map[String, String]()
     val results = queries.toSeq
       .sortBy { case (name, _) => (familyRank(name), name) }
-      .map { case (name, fn) =>
+      .flatMap { case (name, fn) =>
       releaseState(spark)
-      val timesRaw = (1 to runs).map { _ =>
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).count()
-        catch { case _: Throwable => () }
-        val dt = (System.nanoTime() - t0) / 1e9
-        releaseState(spark) // blocks this run left behind never bill the next
-        dt
+      // blocks a run left behind never bill the next
+      val timesRaw = try (1 to runs).map { _ =>
+        try consume(fn(spark, sfDir)) finally releaseState(spark)
+      } catch { case e: Throwable =>
+        failed(name) = String.valueOf(e).take(400)
+        Seq.empty
       }
       // A filtered run in a fresh JVM is JIT/codegen-cold for its
       // first runs (r12: c8's 5-run whole-sample median landed on a
@@ -153,7 +137,7 @@ object Bench {
         fps(name) = md5_12(normalize(unwrap(qe.executedPlan).toString))
       } catch { case _: Throwable => fps(name) = "error" }
       releaseState(spark)
-      name -> times(times.size / 2)
+      times.lift(times.size / 2).map(name -> _)
     }.toMap
     // ANN quality, machine-tracked like timing and plans. Truth is
     // chosen per query for a MEANINGFUL number: s4 (KMeans IVF) and s6
@@ -267,6 +251,7 @@ object Bench {
         "\"" + k + "\":" + (if (quote) "\"" + v + "\"" else v)
       }.mkString("{", ",", "}")
     def jlist(xs: Seq[String]): String = xs.map("\"" + _ + "\"").mkString("[", ",", "]")
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
     def f3(d: Double): String = "%.3f".format(d)
     val recallFailures = recalls.toSeq.sorted.collect {
       case (n, r) if recallFloors.get(n).exists(r < _) => n }
@@ -283,6 +268,7 @@ object Bench {
         s""""recall":${nums(recalls)},""" +
         s""""recall_floors":${nums(recallFloors.filter(f => anns.contains(f._1)))},""" +
         s""""recall_failures":${jlist(recallFailures)},""" +
+        s""""failed":${jmap(failed.toMap.map { case (k, v) => k -> json.writeValueAsString(v) }, quote = false)},""" +
         s""""filtered_recall_sweep":${nums(filteredSweep)},""" +
         s""""plans":${jmap(fps.toMap, quote = true)}}"""
     val qs = jmap(results.map { case (k, v) => k -> f3(v) }, quote = false)

@@ -3,22 +3,6 @@ package graft.core
 import org.apache.spark.sql.{DataFrame, GraftSqlBridge, classic}
 import org.apache.spark.sql.execution.LogicalRDD
 
-/** Release of `localCheckpoint`ed frames. */
-object Checkpoint {
-  /** Unpersists the RDD behind a `localCheckpoint`ed frame (the first
-    * `LogicalRDD` of its plan). Superseded checkpoints are otherwise
-    * freed only when the driver GC collects the Dataset and
-    * ContextCleaner notices — on a large heap that lag lets an
-    * iterative loop pile up dead snapshots in block-manager memory,
-    * evicting live cache. Only call on checkpoints no live plan still
-    * references: the lineage is truncated, so freed blocks are NOT
-    * recomputable.
-    */
-  def release(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collectFirst { case l: LogicalRDD => l.rdd }
-      .foreach(_.unpersist(false))
-}
-
 /** The distributed half of an iterative loop (q66, q68, q69, q71, d8):
   * synchronous rounds, each `step(state, round)` over the last
   * materialized state, in the shape of Shark's iterative computation

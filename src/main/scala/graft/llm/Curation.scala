@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.LongType
-import graft.core.{Checkpoint, Tables}
+import graft.core.{Checkpoint, Scope, Tables}
 
 /** End-to-end corpus curation — the composed pipeline a training-data
   * build actually runs (SURVEY §4.3 north-star): score → filter →
@@ -206,33 +206,25 @@ object Curation {
     */
   def decontaminateBloomAgainst(corpus: DataFrame, bench: DataFrame,
       n: Int = 8, minShared: Long = 5L, excludeSelf: Boolean = false,
-      fpp: Double = 0.01): DataFrame = {
-    val (lazyOut, cache) = decontaminateBloomPlan(corpus, bench, n,
-      minShared, excludeSelf, fpp, persist = true)
-    // Eager: localCheckpoint materializes the (small, O(contaminated
-    // pairs)) result so the benchGrams cache can be released before
-    // returning — mirrors Dedup.setSimJoinOf; without it the cached
-    // blocks leak for the life of the session.
-    val out = lazyOut.localCheckpoint(true)
-    cache.unpersist()
-    out
+      fpp: Double = 0.01): DataFrame = Scope.run { sc =>
+    decontaminateBloomPlan(corpus, bench, n, minShared, excludeSelf, fpp,
+      sc.persist(_)).localCheckpoint(true)
   }
 
-  /** The lazy plan behind [[decontaminateBloomAgainst]], returned
-    * with the bench-gram frame whose cache the caller owns —
-    * package-visible (unpersisted) so BloomSpec can assert the probe
-    * sits below the join in the UNCHECKPOINTED plan, which the eager
-    * public form necessarily hides behind a Scan ExistingRDD.
+  /** The lazy plan behind [[decontaminateBloomAgainst]], with `persist`
+    * applied to the bench-gram frame — package-visible so BloomSpec
+    * can assert the probe sits below the join in the UNCHECKPOINTED
+    * plan, which the eager public form necessarily hides behind a Scan
+    * ExistingRDD.
     */
   private[graft] def decontaminateBloomPlan(corpus: DataFrame,
       bench: DataFrame, n: Int, minShared: Long, excludeSelf: Boolean,
-      fpp: Double, persist: Boolean): (DataFrame, DataFrame) = {
+      fpp: Double, persist: DataFrame => DataFrame): DataFrame = {
     // persisted: the filter build and the join both read it, and it is
     // small by the operator's contract (benchmarks vs a corpus)
-    val benchGrams0 = wordGramTable(bench, n)
+    val benchGrams = persist(wordGramTable(bench, n)
       .select(col("doc_id").as("bench_id"),
-        TextAnalysis.hash60(col("gram")).as("bench_gram_h"))
-    val benchGrams = if (persist) benchGrams0.persist() else benchGrams0
+        TextAnalysis.hash60(col("gram")).as("bench_gram_h")))
     val bits = graft.functions.BloomFunctions.buildSerialized(
       benchGrams, "bench_gram_h", benchGrams.count(), fpp)
     val grams = wordGramTable(corpus, n)
@@ -243,10 +235,10 @@ object Curation {
       if (excludeSelf)
         col("gram_h") === col("bench_gram_h") && col("doc_id") =!= col("bench_id")
       else col("gram_h") === col("bench_gram_h")
-    (grams.join(benchGrams, cond)
+    grams.join(benchGrams, cond)
       .groupBy(col("doc_id"), col("bench_id"))
       .agg(count(lit(1)).as("n_shared"))
-      .filter(col("n_shared") >= minShared), benchGrams)
+      .filter(col("n_shared") >= minShared)
   }
 
   /** Self-contained c9 flavor: same corpus/bench slices as c2, with
@@ -1075,10 +1067,10 @@ object Curation {
     * raw count + a 5-row window — driver-free and fixed-width
     * regardless of corpus size.
     */
-  def attritionReport(s: SparkSession, dir: String): DataFrame = {
+  def attritionReport(s: SparkSession, dir: String): DataFrame = Scope.run { sc =>
     val stages = scala.collection.mutable.ArrayBuffer[(String, DataFrame)]()
     curateFullStaged(s, dir, 2000L, (name, df) => {
-      val cp = df.localCheckpoint(true)
+      val cp = sc.checkpoint(df)
       stages += name -> cp
       cp
     })
@@ -1091,7 +1083,7 @@ object Curation {
     val rawN = counts.filter(col("stage_idx") === 0)
       .select(col("kept").as("raw_n"))
     val w = Window.orderBy("stage_idx")
-    val out = counts.crossJoin(broadcast(rawN))
+    counts.crossJoin(broadcast(rawN))
       .select(col("stage_idx"), col("stage"), col("kept"),
         round(col("kept").cast("double") / col("raw_n").cast("double"), 6)
           .as("kept_frac"),
@@ -1100,11 +1092,7 @@ object Curation {
         round(col("kept").cast("double") /
           lag(col("kept"), 1).over(w).cast("double"), 6))
       .drop("raw_n")
-    // materialize the 5-row report BEFORE releasing the stage
-    // checkpoints it reads; the caller holds only the tiny result
-    val materialized = out.localCheckpoint(true)
-    stages.foreach { case (_, cp) => Checkpoint.release(cp) }
-    materialized
+      .localCheckpoint(true)
   }
 
   // -- c20: curriculum staging by quality quantile ----------------------------

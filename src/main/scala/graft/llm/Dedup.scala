@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.LongType
-import graft.core.{Checkpoint, DriverTier, Rounds, Tables}
+import graft.core.{DriverTier, Rounds, Scope, Tables}
 import TextAnalysis.hash60
 
 /** Deduplication operators (SURVEY §4.3 north-star) over `documents`:
@@ -245,16 +245,9 @@ object Dedup {
     * text and three. (Spark's CacheManager dedupes by canonicalized
     * plan, so repeated calls share one cache entry.)
     */
-  def jaccardVerify(s: SparkSession, dir: String): DataFrame = {
-    val sh = shingleSets(s, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Eager: localCheckpoint materializes the (small, O(candidates))
-    // verified-pair result so the corpus-sized shingle cache can be
-    // RELEASED before returning — a library caller must not keep
-    // paying pinned executor memory after the query completes. The
-    // superseded checkpoint RDD is reclaimed by ContextCleaner when
-    // the returned frame is garbage collected.
-    try minhashCandidatesFrom(sh)
+  def jaccardVerify(s: SparkSession, dir: String): DataFrame = Scope.run { sc =>
+    val sh = sc.persist(shingleSets(s, dir))
+    minhashCandidatesFrom(sh)
       .join(sh.as("sa"), col("doc_a") === col("sa.doc_id"))
       .join(sh.as("sb"), col("doc_b") === col("sb.doc_id"))
       .select(col("doc_a"), col("doc_b"),
@@ -263,7 +256,6 @@ object Dedup {
           4).as("jaccard"))
       .filter(col("jaccard") >= 0.8)
       .localCheckpoint(true)
-    finally sh.unpersist()
   }
 
   /** d18 — LSH health report: one row quantifying how well d2's
@@ -279,10 +271,9 @@ object Dedup {
     * aggregate; the mean accumulates the 4-dp-rounded Jaccards in
     * DECIMAL so it is aggregation-order-proof.
     */
-  def lshPrecision(s: SparkSession, dir: String): DataFrame = {
-    val sh = shingleSets(s, dir)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try minhashCandidatesFrom(sh)
+  def lshPrecision(s: SparkSession, dir: String): DataFrame = Scope.run { sc =>
+    val sh = sc.persist(shingleSets(s, dir))
+    minhashCandidatesFrom(sh)
       .join(sh.as("sa"), col("doc_a") === col("sa.doc_id"))
       .join(sh.as("sb"), col("doc_b") === col("sb.doc_id"))
       .select(
@@ -300,7 +291,6 @@ object Dedup {
         round(col("n_verified").cast("double") /
           col("n_candidates").cast("double"), 6).as("precision"))
       .localCheckpoint(true)
-    finally sh.unpersist()
   }
 
   /** d19 — cross-source redundancy map: d3's verified near-dup pairs
@@ -451,23 +441,20 @@ object Dedup {
     * The ±1/32 quantization is the standard sketch-accuracy trade; d3
     * remains the exact path where the corpus is small enough to re-scan.
     */
-  def jaccardEstimate(s: SparkSession, dir: String): DataFrame = {
+  def jaccardEstimate(s: SparkSession, dir: String): DataFrame = Scope.run { sc =>
     // one materialization feeds candidate generation AND both join
     // sides — without it the signature pipeline (scan+shingle+hash)
-    // would execute three times. The O(candidates) result is then
-    // checkpointed eagerly so the corpus-sized signature cache can be
-    // RELEASED before returning (same hygiene as [[jaccardVerify]]).
-    val sigs = signatures(s, dir).localCheckpoint(true)
+    // would execute three times
+    val sigs = sc.checkpoint(signatures(s, dir))
     val matches = (0 until NumHashes).map(k =>
       when(col(s"sa.m$k") === col(s"sb.m$k"), 1).otherwise(0))
       .reduce(_ + _)
-    try candidatesFromSigs(sigs)
+    candidatesFromSigs(sigs)
       .join(sigs.as("sa"), col("doc_a") === col("sa.doc_id"))
       .join(sigs.as("sb"), col("doc_b") === col("sb.doc_id"))
       .select(col("doc_a"), col("doc_b"),
         round(matches.cast("double") / NumHashes, 4).as("jaccard_est"))
       .localCheckpoint(true)
-    finally Checkpoint.release(sigs)
   }
 
   // -- d4: SimHash ---------------------------------------------------------
@@ -685,10 +672,9 @@ object Dedup {
       .distinct()
   }
 
-  def setSimJoinOf(docs: DataFrame, t: Double = 0.8): DataFrame = {
-    val sh = shingleSetsOf(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val out = setSimCandidatesOf(sh, t)
+  def setSimJoinOf(docs: DataFrame, t: Double = 0.8): DataFrame = Scope.run { sc =>
+    val sh = sc.persist(shingleSetsOf(docs))
+    setSimCandidatesOf(sh, t)
       .join(sh.as("sa"), col("doc_a") === col("sa.doc_id"))
       .join(sh.as("sb"), col("doc_b") === col("sb.doc_id"))
       .select(col("doc_a"), col("doc_b"),
@@ -697,8 +683,6 @@ object Dedup {
             .cast("double"), 4).as("jaccard"))
       .filter(col("jaccard") >= t)
       .localCheckpoint(true)
-    sh.unpersist()
-    out
   }
 
   def setSimJoin(s: SparkSession, dir: String): DataFrame =
@@ -760,22 +744,19 @@ object Dedup {
   /** [[containmentJoin]] over an arbitrary (doc_id, text) frame — the
     * spec entry point for hand-built fixtures.
     */
-  def containmentJoinOf(docs: DataFrame): DataFrame = {
-    val toks = docs
+  def containmentJoinOf(docs: DataFrame): DataFrame = Scope.run { sc =>
+    val toks = sc.persist(docs
       .filter(col("text").isNotNull)
       .select(col("doc_id"),
         array_distinct(transform(
           TextAnalysis.tokens(lower(col("text"))), t => xxhash64(t)))
           .as("hs"))
-      .withColumn("n", size(col("hs")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("n", size(col("hs"))))
     val vocab = toks.select(explode(col("hs")).as("h"))
       .agg(countDistinct(col("h"))).head().getLong(0)
-    val out = (if (vocab <= ContainDenseVocabMax) containDense(toks)
-               else containSparse(toks))
+    (if (vocab <= ContainDenseVocabMax) containDense(toks)
+     else containSparse(toks))
       .localCheckpoint(true)
-    toks.unpersist()
-    out
   }
 
   /** Dense regime: exact bitset containment over a ≤ 64-token
@@ -884,16 +865,15 @@ object Dedup {
     * exact `except`.
     */
   def connectedComponents(edges: DataFrame, maxIter: Int = 25,
-      driverMaxEdges: Long = DriverTier.CcDriverMaxEdges): DataFrame = {
+      driverMaxEdges: Long = DriverTier.CcDriverMaxEdges): DataFrame = Scope.run { sc =>
     // materialize the upstream edge pipeline ONCE: both derivations
     // below (node list, canonical edge set) would otherwise recompute
     // the full candidate-generation lineage — for the dedup graph
     // that's two complete LSH passes over the corpus
-    val e = edges.toDF("src", "dst").localCheckpoint(true)
+    val e = sc.checkpoint(edges.toDF("src", "dst"))
     // gating on the RAW count spares the driver arm the node-list
     // checkpoint, round 0 and a second collect
     DriverTier.run(e, driverMaxEdges, "connectedComponents") { pairs =>
-      Checkpoint.release(e)
       val parent = new java.util.HashMap[Long, Long](pairs.length * 2)
       def find(x: Long): Long = {
         var r = x
@@ -923,19 +903,18 @@ object Dedup {
       // checkpoint the node list too: it survives to the final labeling
       // join, and re-derives with fresh attribute ids (same-attribute
       // unions trip Catalyst's constraint rewriting)
-      val nodes = e.select(col("src").as("id"))
+      val nodes = sc.checkpoint(e.select(col("src").as("id"))
         .union(e.select(col("dst").as("id")))
-        .distinct()
-        .localCheckpoint(true)
+        .distinct())
       // round 0: the canonical edge set, filled by the first count
-      val e0 = e.filter(col("src") =!= col("dst"))
+      val e0 = sc.own(e.filter(col("src") =!= col("dst"))
         .select(greatest(col("src"), col("dst")).as("hi"),
           least(col("src"), col("dst")).as("lo"))
         .distinct()
-        .localCheckpoint(false)
+        .localCheckpoint(false))
       // fixpoint = the round returned the input edge set: count-equal
       // + empty one-sided difference ⇒ set equality for distinct sets
-      val last = Rounds.run(e0, maxIter, Some((prev, next) =>
+      val last = sc.own(Rounds.run(e0, maxIter, Some((prev, next) =>
           next.rows == prev.rows && next.df.except(prev.df).isEmpty)) { (edgeSet, _) =>
         // LARGE-STAR: every node connects its strictly-larger neighbors
         // to the minimum of its closed neighborhood. The symmetric edge
@@ -962,7 +941,7 @@ object Dedup {
           .select(col("p.a").as("hi"), col("p.b").as("lo"))
           .filter(col("hi") =!= col("lo"))
           .distinct()
-      }
+      })
       // terminal state: per component, a star centered at the minimum id
       // — every non-center node has exactly the edge (node, center). The
       // groupBy(min) is belt-and-braces for a maxIter cutoff; centers
@@ -977,12 +956,8 @@ object Dedup {
           coalesce(col("lbl"), col("id")).as("cluster_id"))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       labels.count()
-      val out = labels.sparkSession.createDataFrame(labels.rdd, labels.schema)
-      // everything the loop touched is dead now that the label table is
-      // cached: the raw-edge/node checkpoints and the rounds' first and
-      // last edge sets
-      Seq(e, nodes, e0, last).foreach(Checkpoint.release)
-      out
+      // the scope's checkpoints are dead once the label table is cached
+      labels.sparkSession.createDataFrame(labels.rdd, labels.schema)
     }
   }
 
@@ -1469,17 +1444,13 @@ object Dedup {
   /** The sparse (Bayardo) plan end-to-end — also the verify tail of
     * [[apssFromIndex]].
     */
-  private[graft] def apssSparseOf(docs: DataFrame): DataFrame = {
+  private[graft] def apssSparseOf(docs: DataFrame): DataFrame = Scope.run { sc =>
     // persisted (r16): the state frame feeds the candidate self-join
     // (both sides), the pruning stats, both verify weight joins, and
     // both norm joins — SIX plan references that each re-derived the
-    // whole tokenize/tf/df/window pipeline. Eager-checkpoint the
-    // O(pairs) result so the corpus-sized cache releases on return
-    // (the jaccardVerify hygiene).
-    val state = apssState(docs)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try apssVerify(state, apssCandidates(state)).localCheckpoint(true)
-    finally state.unpersist()
+    // whole tokenize/tf/df/window pipeline
+    val state = sc.persist(apssState(docs))
+    apssVerify(state, apssCandidates(state)).localCheckpoint(true)
   }
 
   /** The dense plan: docs as dense unit vectors over the ranked

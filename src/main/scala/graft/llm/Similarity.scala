@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.LongType
-import graft.core.Tables
+import graft.core.{Scope, Tables}
 
 /** Embedding similarity search (SURVEY §4.3 north-star) over the
   * `embeddings` table (64-dim float vectors, integer cluster label).
@@ -370,24 +370,21 @@ object Similarity {
   /** IVF core over any (vec_id, v, nrm) frame — fit quantizer, assign
     * cells, rank centroids per query, probe. Queries are vec_id < 20.
     */
-  def knnIvfOn(embDf: DataFrame, k: Int, nprobe: Int, topK: Int): DataFrame = {
+  def knnIvfOn(embDf: DataFrame, k: Int, nprobe: Int, topK: Int): DataFrame = Scope.run { sc =>
     val s = embDf.sparkSession
     import s.implicits._
     val e = withFeatures(embDf)
     val model = fitKmeans(e, k)
     // persisted: the assignment feeds BOTH the query/probe subtree and
     // the corpus side of the cell join — without the cache the KMeans
-    // transform lineage executes twice; released before returning (the
-    // small result is checkpointed below)
-    val assigned = model.transform(e)
-      .select(col("vec_id"), col("v"), col("nrm"), col("prediction").as("cell"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // transform lineage executes twice
+    val assigned = sc.persist(model.transform(e)
+      .select(col("vec_id"), col("v"), col("nrm"), col("prediction").as("cell")))
     val cents = model.clusterCenters.toSeq.zipWithIndex
       .map { case (c, i) => (i, c.toArray) }
     val centDf = cents.toDF("cell", "cv")
       .withColumn("cc", dot(col("cv"), col("cv")))
-    try probeCells(assigned, centDf, nprobe, topK).localCheckpoint(true)
-    finally assigned.unpersist()
+    probeCells(assigned, centDf, nprobe, topK).localCheckpoint(true)
   }
 
   /** Builds and PERSISTS the IVF index: the cell-assigned corpus as a
@@ -513,13 +510,12 @@ object Similarity {
     * level down).
     */
   def buildPqIndex(s: SparkSession, dir: String, indexDir: String,
-      m: Int = PqM, k: Int = PqK): Unit = {
+      m: Int = PqM, k: Int = PqK): Unit = Scope.run { sc =>
     import s.implicits._
     val dsub = Dims / m
-    val unit = emb(s, dir)
+    val unit = sc.persist(emb(s, dir)
       .select(col("vec_id"),
-        graft.functions.VectorFunctions.vecDiv(col("v"), col("nrm")).as("uv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        graft.functions.VectorFunctions.vecDiv(col("v"), col("nrm")).as("uv")))
     val centroids = (0 until m).flatMap { sub =>
       val sv = unit.select(
         org.apache.spark.ml.functions.array_to_vector(
@@ -539,7 +535,6 @@ object Similarity {
     centroids.toDF("sub", "code", "cv")
       .coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
       .parquet(s"$indexDir/codebooks")
-    unit.unpersist()
   }
 
   /** ADC search over a [[buildPqIndex]] layout — the fully-composed
@@ -967,7 +962,7 @@ object Similarity {
     * replayable); this is its fitted, persisted twin.
     */
   def buildIvfPqIndex(s: SparkSession, dir: String, indexDir: String,
-      k: Int = 16, m: Int = PqM, pqK: Int = PqK): Unit = {
+      k: Int = 16, m: Int = PqM, pqK: Int = PqK): Unit = Scope.run { sc =>
     import s.implicits._
     val dsub = Dims / m
     val unit = unitVecs(s, dir)
@@ -977,35 +972,32 @@ object Similarity {
     val cents = model.clusterCenters.toSeq.zipWithIndex
       .map { case (c, i) => (i, c.toArray.toSeq) }
     val centDf = broadcast(cents.toDF("cell", "ccv"))
-    val rv = model.transform(e)
+    val rv = sc.persist(model.transform(e)
       .select(col("vec_id"), col("uv"), col("prediction").as("cell"))
       .join(centDf, "cell")
       .select(col("vec_id"), col("cell"),
-        zip_with(col("uv"), col("ccv"), (a, b) => a - b).as("rv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val books = (0 until m).flatMap { sub =>
-        val sv = rv.select(org.apache.spark.ml.functions.array_to_vector(
-          slice(col("rv"), sub * dsub + 1, dsub)).as("features"))
-        fitKmeans(sv, pqK).clusterCenters.zipWithIndex
-          .map { case (c, i) => (sub, i, c.toArray.toSeq) }
-      }
-      val flat = new Array[Double](m * pqK * dsub)
-      books.foreach { case (sub, code, cv) =>
-        cv.indices.foreach(j => flat((sub * pqK + code) * dsub + j) = cv(j))
-      }
-      graft.ops.Partitioning.writePartitioned(
-        rv.select(col("vec_id"), col("cell"),
-          graft.functions.VectorFunctions.pqEncode(col("rv"), flat, m)
-            .as("codes")),
-        s"$indexDir/cells", "cell")
-      cents.toDF("cell", "cv")
-        .coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$indexDir/centroids")
-      books.toDF("sub", "code", "cv")
-        .coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
-        .parquet(s"$indexDir/codebooks")
-    } finally rv.unpersist()
+        zip_with(col("uv"), col("ccv"), (a, b) => a - b).as("rv")))
+    val books = (0 until m).flatMap { sub =>
+      val sv = rv.select(org.apache.spark.ml.functions.array_to_vector(
+        slice(col("rv"), sub * dsub + 1, dsub)).as("features"))
+      fitKmeans(sv, pqK).clusterCenters.zipWithIndex
+        .map { case (c, i) => (sub, i, c.toArray.toSeq) }
+    }
+    val flat = new Array[Double](m * pqK * dsub)
+    books.foreach { case (sub, code, cv) =>
+      cv.indices.foreach(j => flat((sub * pqK + code) * dsub + j) = cv(j))
+    }
+    graft.ops.Partitioning.writePartitioned(
+      rv.select(col("vec_id"), col("cell"),
+        graft.functions.VectorFunctions.pqEncode(col("rv"), flat, m)
+          .as("codes")),
+      s"$indexDir/cells", "cell")
+    cents.toDF("cell", "cv")
+      .coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .parquet(s"$indexDir/centroids")
+    books.toDF("sub", "code", "cv")
+      .coalesce(1).write.mode(org.apache.spark.sql.SaveMode.Overwrite)
+      .parquet(s"$indexDir/codebooks")
   }
 
   /** Appends NEW embeddings to a [[buildIvfPqIndex]] layout without

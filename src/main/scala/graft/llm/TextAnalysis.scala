@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.LongType
-import graft.core.{Checkpoint, DriverTier, Tables}
+import graft.core.{Checkpoint, DriverTier, Scope, Tables}
 
 /** Text-analysis operators for a large-scale training-data pipeline
   * (SURVEY §4.3 north-star): token stats, quality scoring, language ID,
@@ -876,8 +876,8 @@ object TextAnalysis {
     * trains on the driver; larger ones run the distributed merge loop.
     */
   def trainBpeFrom(wordsIn: DataFrame, k: Int,
-      driverMaxVocab: Long = DriverTier.BpeDriverMaxVocab): Seq[BpeMerge] = {
-    val words0 = wordsIn.localCheckpoint(true)
+      driverMaxVocab: Long = DriverTier.BpeDriverMaxVocab): Seq[BpeMerge] = Scope.run { sc =>
+    val words0 = sc.checkpoint(wordsIn)
     // the driver arm replicates the distributed loop's exact semantics
     // over the collected (w, cnt) rows —
     //  * pair counts: adjacent symbols of split(trim(w), " "),
@@ -890,7 +890,6 @@ object TextAnalysis {
     //    String.replace is the same leftmost non-overlapping
     //    all-occurrence replace as Spark's replace().
     DriverTier.run(words0, driverMaxVocab, "trainBpeFrom") { rows =>
-      Checkpoint.release(words0)
       def utf8Lt(x: String, y: String): Boolean = {
         val (xb, yb) = (x.getBytes("UTF-8"), y.getBytes("UTF-8"))
         val n = math.min(xb.length, yb.length)

@@ -6,6 +6,7 @@ import org.apache.spark.ml.param.ParamMap
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 import org.apache.spark.storage.StorageLevel
+import graft.core.Scope
 import graft.stats.Statistics
 
 /** End-to-end training flow (reference `Scripts/3_...py` template and
@@ -33,26 +34,24 @@ object TrainJob {
   def run(cleaned: DataFrame, catCols: Seq[String], numCols: Seq[String],
       estimator: PipelineStage, grid: Option[Array[ParamMap]],
       cvFolds: Option[Int] = None, labelCol: String = "Delay_Status")
-      : Result = {
-    val df = cleaned.withColumnRenamed(labelCol, "label")
-      .persist(StorageLevel.MEMORY_ONLY)
-    try {
-      val (train, test) = split(df)
-      val pipeline = Features.pipelineCreator(catCols, numCols, estimator)
-      val evaluator = new BinaryClassificationEvaluator().setMetricName("areaUnderROC")
-      grid match {
-        case Some(g) if cvFolds.isDefined =>
-          val m = Tuning.crossValidate(pipeline, g, evaluator, train,
-            folds = cvFolds.get)
-          Result(Some(Tuning.bestParams(m)), Evaluate.metrics(m.transform(test)))
-        case Some(g) =>
-          val m = Tuning.trainValidationSplit(pipeline, g, evaluator, train)
-          Result(Some(Tuning.bestParams(m)), Evaluate.metrics(m.transform(test)))
-        case None =>
-          val m = pipeline.fit(train)
-          Result(None, Evaluate.metrics(m.transform(test)))
-      }
-    } finally df.unpersist()
+      : Result = Scope.run { sc =>
+    val df = sc.persist(cleaned.withColumnRenamed(labelCol, "label"),
+      StorageLevel.MEMORY_ONLY)
+    val (train, test) = split(df)
+    val pipeline = Features.pipelineCreator(catCols, numCols, estimator)
+    val evaluator = new BinaryClassificationEvaluator().setMetricName("areaUnderROC")
+    grid match {
+      case Some(g) if cvFolds.isDefined =>
+        val m = Tuning.crossValidate(pipeline, g, evaluator, train,
+          folds = cvFolds.get)
+        Result(Some(Tuning.bestParams(m)), Evaluate.metrics(m.transform(test)))
+      case Some(g) =>
+        val m = Tuning.trainValidationSplit(pipeline, g, evaluator, train)
+        Result(Some(Tuning.bestParams(m)), Evaluate.metrics(m.transform(test)))
+      case None =>
+        val m = pipeline.fit(train)
+        Result(None, Evaluate.metrics(m.transform(test)))
+    }
   }
 
   /** The three feature sets of every reference training script: full
@@ -72,10 +71,10 @@ object TrainJob {
     * the ROC-AUC argmax. No grid search — the topology IS the grid.
     */
   def runMlp(cleaned: DataFrame, catCols: Seq[String], numCols: Seq[String],
-      labelCol: String = "Delay_Status"): (Array[Int], Evaluate.Metrics) = {
-    val df = cleaned.withColumnRenamed(labelCol, "label")
-      .persist(StorageLevel.MEMORY_ONLY)
-    try {
+      labelCol: String = "Delay_Status"): (Array[Int], Evaluate.Metrics) =
+    Scope.run { sc =>
+      val df = sc.persist(cleaned.withColumnRenamed(labelCol, "label"),
+        StorageLevel.MEMORY_ONLY)
       val (train, test) = split(df)
       val inputSize = Features.featureSize(train, catCols, numCols)
       Models.mlpTopologies(inputSize)
@@ -85,6 +84,5 @@ object TrainJob {
           (layers, Evaluate.metrics(m.transform(test)))
         }
         .maxBy(_._2.areaRoc)
-    } finally { df.unpersist(); () }
-  }
+    }
 }

@@ -2,7 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.core.Tables
+import graft.core.{Scope, Tables}
 
 /** Table-maintenance operators for a long-lived corpus: keyed upsert,
   * keyed delete, snapshot diff, incremental aggregate maintenance,
@@ -246,15 +246,6 @@ object Maintenance {
     (b1, b2)
   }
 
-  /** CDC scratch directories embed this JVM's PID so a cleanup sweep
-    * (Bench's releaseState) can match ITS OWN scratch only — a
-    * concurrent Verify/test/bench process on the same box keeps its
-    * live CDC tables (the bare "graft_q6*" glob used to delete them
-    * mid-query).
-    */
-  def cdcScratchPrefix(q: String): String =
-    s"graft_${q}_p${ProcessHandle.current().pid()}_"
-
   /** q60 — the streaming CDC upsert's apply semantics made ORACLE-
     * visible (the batch-equivalence specs were previously the only
     * gate): two deterministic change batches — a full version-1
@@ -262,20 +253,21 @@ object Maintenance {
     * [[graft.streaming.IngestUpsert.processBatch]] into a scratch
     * bucketed table, with the second batch applied TWICE so the
     * replay-idempotence contract is inside the gated query itself; the
-    * query returns the table's final state. The oracle is the
+    * query returns the table's final state, materialized, so the
+    * scratch table is deleted before it returns. The oracle is the
     * semantic definition the sink must converge to: window-latest per
     * key over the unioned batches.
     */
-  def q60CdcUpsert(s: SparkSession, dir: String): DataFrame = {
+  def q60CdcUpsert(s: SparkSession, dir: String): DataFrame = Scope.run { sc =>
     val (b1, b2) = q60Batches(s, dir)
-    val tmp = java.nio.file.Files.createTempDirectory(cdcScratchPrefix("q60"))
-      .resolve("t").toString
+    val tmp = sc.tempDir("q60").resolve("t").toString
     graft.streaming.IngestUpsert.processBatch(b1, tmp, Seq("doc_id"), "ver", 8)
     graft.streaming.IngestUpsert.processBatch(b2, tmp, Seq("doc_id"), "ver", 8)
     // replay: convergent, so the final state is unchanged
     graft.streaming.IngestUpsert.processBatch(b2, tmp, Seq("doc_id"), "ver", 8)
     graft.streaming.IngestUpsert.readTable(s, tmp)
       .select("doc_id", "source", "n_chars", "ver")
+      .localCheckpoint(true)
   }
 
   /** q61's two CDC batches (event log split at its temporal midpoint). */
@@ -298,11 +290,12 @@ object Maintenance {
     * replayed), and the final dimension must equal the ONE-SHOT
     * [[scdType2]] over the whole log — so the oracle is q55's SQL
     * verbatim. Replay convergence and incremental ≡ batch were
-    * previously spec-only contracts; this row hash-gates both.
+    * previously spec-only contracts; this row hash-gates both. Like
+    * q60, the final dimension returns materialized and the scratch
+    * table is deleted before the query returns.
     */
-  def q61CdcScd2(s: SparkSession, dir: String): DataFrame = {
-    val tmp = java.nio.file.Files.createTempDirectory(cdcScratchPrefix("q61"))
-      .resolve("t").toString
+  def q61CdcScd2(s: SparkSession, dir: String): DataFrame = Scope.run { sc =>
+    val tmp = sc.tempDir("q61").resolve("t").toString
     val (b1, b2) = q61Batches(s, dir)
     graft.streaming.IngestScd2.processBatch(b1, tmp, Seq("user_id"), "ts", 8)
     graft.streaming.IngestScd2.processBatch(b2, tmp, Seq("user_id"), "ts", 8)
@@ -313,6 +306,7 @@ object Maintenance {
         unix_timestamp(col("valid_from")).as("valid_from_s"),
         unix_timestamp(col("valid_to")).as("valid_to_s"),
         col("is_current"))
+      .localCheckpoint(true)
   }
 
   /** q62 — incremental JOIN-view maintenance, the join analogue of

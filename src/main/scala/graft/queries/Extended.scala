@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.LongType
-import graft.core.{Checkpoint, DriverTier, Rounds, Tables}
+import graft.core.{Checkpoint, DriverTier, Rounds, Scope, Tables}
 
 /** Engine-extension surface (SURVEY §2.4 closing note): join variants,
   * window functions, grouping sets, set ops, JSON access, scalar
@@ -883,8 +883,8 @@ object Extended {
     * lineitem⋈orders pair (suppliers sit past the customer key
     * space), from lines with `l_quantity >= minQty` only when given.
     * Eagerly checkpointed: every round of a graph loop reads it. q68
-    * and q71 (and q69, over its weighted edges) free it once the loop
-    * returns: a driver arm returns collected rows and
+    * and q71 (and q69, over its weighted edges) own it in a
+    * [[graft.core.Scope]]: a driver arm returns collected rows and
     * [[graft.core.Rounds]] a materialized round, so no result reads it.
     */
   private[graft] def tradeEdges(s: SparkSession, dir: String,
@@ -1278,10 +1278,9 @@ object Extended {
     * O(frontier out-edges), never the whole graph. The oracle unrolls
     * the same three rounds as MATERIALIZED CTEs.
     */
-  def q68BfsLevels(s: SparkSession, dir: String): DataFrame = {
-    val edges = tradeEdges(s, dir, minQty = Some(45))
-    try bfsLevelsOf(edges, tradeSeeds(edges), depth = 3)
-    finally Checkpoint.release(edges)
+  def q68BfsLevels(s: SparkSession, dir: String): DataFrame = Scope.run { sc =>
+    val edges = sc.own(tradeEdges(s, dir, minQty = Some(45)))
+    bfsLevelsOf(edges, tradeSeeds(edges), depth = 3)
   }
 
   /** The q68 core over arbitrary directed (src, dst) edges and a
@@ -1352,18 +1351,16 @@ object Extended {
     * executors each round is two narrow shuffles over the frontier's
     * out-neighborhood, never the whole graph.
     */
-  def q69Sssp(s: SparkSession, dir: String): DataFrame = {
+  def q69Sssp(s: SparkSession, dir: String): DataFrame = Scope.run { sc =>
     val e0 = t(s, dir, "lineitem").filter(col("l_quantity") >= 45)
       .join(t(s, dir, "orders"), col("l_orderkey") === col("o_orderkey"))
       .select((col("l_suppkey") + 1000000L).as("src"),
         col("o_custkey").as("dst"),
         col("l_quantity").cast(LongType).as("q"))
       .groupBy("src", "dst").agg((min(col("q")) - 40L).as("w"))
-    val edges = e0.unionByName(
-        e0.select(col("dst").as("src"), col("src").as("dst"), col("w")))
-      .localCheckpoint(true)
-    try ssspOf(edges, tradeSeeds(edges), rounds = 4)
-    finally Checkpoint.release(edges)
+    val edges = sc.checkpoint(e0.unionByName(
+        e0.select(col("dst").as("src"), col("src").as("dst"), col("w"))))
+    ssspOf(edges, tradeSeeds(edges), rounds = 4)
   }
 
   /** The q69 core over arbitrary weighted directed (src, dst, w)

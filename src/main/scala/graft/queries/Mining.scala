@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.LongType
-import graft.core.{Checkpoint, DriverTier, Rounds, Tables}
+import graft.core.{DriverTier, Rounds, Scope, Tables}
 
 /** Pattern-mining operators a training-data curation pipeline runs at
   * corpus scale: association rules over co-occurrence baskets
@@ -108,10 +108,9 @@ object Mining {
     * candidates — state is one long per node, materialized per round
     * by [[graft.core.Rounds]].
     */
-  def q71LabelProp(s: SparkSession, dir: String): DataFrame = {
-    val edges = Extended.tradeEdges(s, dir, minQty = Some(45))
-    try labelPropagate(edges, LpaRounds)
-    finally Checkpoint.release(edges)
+  def q71LabelProp(s: SparkSession, dir: String): DataFrame = Scope.run { sc =>
+    labelPropagate(sc.own(Extended.tradeEdges(s, dir, minQty = Some(45))),
+      LpaRounds)
   }
 
   /** The q71 core over arbitrary symmetric (src, dst) edges — spec

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.ml.feature.{StringIndexer, UnivariateFeatureSelector, VectorAssembler}
 import org.apache.spark.ml.linalg.{DenseMatrix, Matrix, Vector}
 import org.apache.spark.ml.stat.{ChiSquareTest, Correlation, Summarizer}
+import graft.core.Scope
 
 /** Statistical-analysis & feature-selection surface (SURVEY §2.5
   * M1/M3/M5–M9; reference `Scripts/2_cs_777_statistical_analysis_
@@ -145,22 +146,13 @@ object Statistics {
     */
   def analyze(cleanedDf: DataFrame, label: String = "Delay_Status",
       dropCols: Seq[String] = Seq("Origin", "Dest", "Distance", "Quarter", "Diverted"))
-      : Selection = {
+      : Selection = Scope.run { sc =>
     // The indexer fit, the correlation and the cached feature frame
     // each rescan the input — persist it for library callers that
-    // didn't (guarded so an already-cached caller's StorageLevel is
-    // left alone).
-    val ownPersist =
-      cleanedDf.storageLevel == org.apache.spark.storage.StorageLevel.NONE
-    if (ownPersist) cleanedDf.persist()
-    try analyzeOn(cleanedDf, label, dropCols)
-    finally if (ownPersist) { cleanedDf.unpersist(); () }
-  }
-
-  private def analyzeOn(cleanedDf: DataFrame, label: String,
-      dropCols: Seq[String]): Selection = {
-    val (cat0, num0) = catNumCols(cleanedDf, label)
-    val indexed0 = indexCategoricals(cleanedDf, cat0)
+    // didn't (an already-cached caller's frame is left as it is).
+    val in = sc.persist(cleanedDf)
+    val (cat0, num0) = catNumCols(in, label)
+    val indexed0 = indexCategoricals(in, cat0)
     val before = cat0.map(_ + "_string") ++ num0 :+ label
     val corrBefore = correlationMatrix(indexed0, before)
 
@@ -174,17 +166,15 @@ object Statistics {
 
     // χ², the ANOVA selector and the variance pass read this frame —
     // cache it once.
-    val withNum = new VectorAssembler()
+    val withNum = sc.persist(new VectorAssembler()
       .setInputCols(num.toArray).setOutputCol("vector_assem_num")
-      .transform(df).persist()
+      .transform(df))
 
-    try {
-      val chi = chiSquare(withNum, cat, label)
-      Selection(
-        uniCat = chiSquareTopK(chi, 3),
-        uniNum = univariateSelect(withNum, num, "vector_assem_num", 7, label),
-        varNum = varianceTopK(withNum, num),
-        chi = chi, corrBefore = corrBefore, corrAfter = corrAfter)
-    } finally { withNum.unpersist(); () }
+    val chi = chiSquare(withNum, cat, label)
+    Selection(
+      uniCat = chiSquareTopK(chi, 3),
+      uniNum = univariateSelect(withNum, num, "vector_assem_num", 7, label),
+      varNum = varianceTopK(withNum, num),
+      chi = chi, corrBefore = corrBefore, corrAfter = corrAfter)
   }
 }

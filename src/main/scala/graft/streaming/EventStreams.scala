@@ -2,7 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
+  StreamingQuery}
 import java.sql.Timestamp
 
 /** Structured Streaming surface (SURVEY §1.4 engine mapping note: the
@@ -36,6 +37,18 @@ object EventStreams {
   case class SessionState(startTs: Long, lastTs: Long, nEvents: Long)
   case class SessionOut(user_id: Long, session_id: Long, n_events: Long,
       start_ms: Long, end_ms: Long)
+
+  /** Starts the one sink shape of the `Ingest*` jobs: `input` in append
+    * mode, each micro-batch and its id handed to `apply`, progress
+    * checkpointed under `checkpoint`.
+    */
+  def microBatches[T](input: Dataset[T], checkpoint: String)
+      (apply: (Dataset[T], Long) => Unit): StreamingQuery =
+    input.writeStream
+      .outputMode("append")
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch(apply)
+      .start()
 
   /** File-source stream over a parquet events directory (schema must
     * be supplied — streaming sources don't infer).

@@ -35,12 +35,8 @@ object IngestAnn {
     */
   def run(vecs: DataFrame, indexDir: String,
       checkpoint: String): StreamingQuery =
-    vecs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          Similarity.appendToLshIndex(batch.sparkSession, batch, indexDir)
-      }
-      .start()
+    EventStreams.microBatches(vecs, checkpoint) { (batch, _) =>
+      if (!batch.isEmpty)
+        Similarity.appendToLshIndex(batch.sparkSession, batch, indexDir)
+    }
 }

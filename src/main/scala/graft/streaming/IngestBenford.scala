@@ -41,13 +41,9 @@ object IngestBenford {
 
   def run(amounts: DataFrame, outPath: String,
       checkpoint: String): StreamingQuery =
-    amounts.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], id: Long) =>
-        processBatch(batch.toDF(), id, outPath)
-      }
-      .start()
+    EventStreams.microBatches(amounts, checkpoint) { (batch, id) =>
+      processBatch(batch, id, outPath)
+    }
 
   /** One micro-batch — public so replay idempotence is directly
     * testable. Emits one row per observed digit (batch count, share,

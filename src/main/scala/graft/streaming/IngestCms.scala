@@ -33,13 +33,9 @@ object IngestCms {
     */
   def run(docs: DataFrame, sketchPath: String,
       checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], id: Long) =>
-        processBatch(batch.toDF(), id, sketchPath)
-      }
-      .start()
+    EventStreams.microBatches(docs, checkpoint) { (batch, id) =>
+      processBatch(batch, id, sketchPath)
+    }
 
   /** One micro-batch: tokenize, aggregate the grid, overwrite this
     * batch's directory. An empty batch still writes its (all-zero)

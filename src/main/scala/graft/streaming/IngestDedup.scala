@@ -64,13 +64,9 @@ object IngestDedup {
   def run(docs: DataFrame, indexTable: String, acceptedPath: String,
       checkpoint: String, buckets: Int = 8,
       gate: DataFrame => DataFrame = identity): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], id: Long) =>
-        processBatch(batch.toDF(), id, indexTable, acceptedPath, buckets, gate)
-      }
-      .start()
+    EventStreams.microBatches(docs, checkpoint) { (batch, id) =>
+      processBatch(batch, id, indexTable, acceptedPath, buckets, gate)
+    }
 
   /** Stateless Gopher-rule curation gate for [[run]]: only documents
     * passing the t9 rule battery ([[graft.llm.TextAnalysis.qualityRulesOf]])
@@ -97,13 +93,12 @@ object IngestDedup {
     val w = Window.partitionBy("fp").orderBy("doc_id")
     // one materialization feeds both sinks: the accepted semi-join
     // and the index append must see the SAME survivor set
-    val fresh = Dedup.fingerprintsOf(admitted)
-      .join(s.table(indexTable), Seq("fp"), "left_anti")
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") === 1)
-      .select(col("doc_id"), col("fp"))
-      .persist()
-    try {
+    graft.core.Scope.run { sc =>
+      val fresh = sc.persist(Dedup.fingerprintsOf(admitted)
+        .join(s.table(indexTable), Seq("fp"), "left_anti")
+        .withColumn("rk", row_number().over(w))
+        .filter(col("rk") === 1)
+        .select(col("doc_id"), col("fp")))
       // empty survivor set ⇒ write NOTHING: on a crash-replay whose
       // first attempt fully committed, overwriting would destroy the
       // committed accepted directory (see the crash-point analysis)
@@ -116,7 +111,7 @@ object IngestDedup {
           .bucketBy(buckets, "fp").sortBy("fp")
           .saveAsTable(indexTable)
       }
-    } finally fresh.unpersist()
+    }
   }
 
   /** Rewrites the fingerprint index as its distinct fps — reclaiming

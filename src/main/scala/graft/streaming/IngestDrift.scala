@@ -49,13 +49,9 @@ object IngestDrift {
 
   def run(vecs: DataFrame, baselinePath: String, outPath: String,
       checkpoint: String): StreamingQuery =
-    vecs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], id: Long) =>
-        processBatch(batch.toDF(), id, baselinePath, outPath)
-      }
-      .start()
+    EventStreams.microBatches(vecs, checkpoint) { (batch, id) =>
+      processBatch(batch, id, baselinePath, outPath)
+    }
 
   /** One micro-batch — public so replay idempotence is directly
     * testable. Emits one row per dimension: the batch mean, the

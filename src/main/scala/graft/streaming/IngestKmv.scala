@@ -35,13 +35,9 @@ object IngestKmv {
     */
   def run(docs: DataFrame, sketchPath: String,
       checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], id: Long) =>
-        processBatch(batch.toDF(), id, sketchPath)
-      }
-      .start()
+    EventStreams.microBatches(docs, checkpoint) { (batch, id) =>
+      processBatch(batch, id, sketchPath)
+    }
 
   /** One micro-batch: hash bigrams, aggregate the k-min array,
     * overwrite this batch's directory. An empty batch writes an empty

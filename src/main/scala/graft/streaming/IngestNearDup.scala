@@ -50,13 +50,9 @@ object IngestNearDup {
 
   def run(docs: DataFrame, bandTable: String, hsetTable: String,
       acceptedPath: String, checkpoint: String): StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], id: Long) =>
-        processBatch(batch.toDF(), id, bandTable, hsetTable, acceptedPath)
-      }
-      .start()
+    EventStreams.microBatches(docs, checkpoint) { (batch, id) =>
+      processBatch(batch, id, bandTable, hsetTable, acceptedPath)
+    }
 
   /** One micro-batch — public so replay idempotence is directly
     * testable (same contract as [[IngestDedup.processBatch]]).
@@ -69,8 +65,8 @@ object IngestNearDup {
         size(array_union(col("ha"), col("hb"))).cast("double"), 4)
     // one shingling feeds signatures, both verify sides, and the
     // index appends
-    val hsets = Dedup.hsetsOf(batch).persist()
-    try {
+    graft.core.Scope.run { sc =>
+      val hsets = sc.persist(Dedup.hsetsOf(batch))
       val sigs = Dedup.signaturesFromHashed(
         hsets.select(col("doc_id"), explode(col("hset")).as("hv")))
       val bandCols = Seq("doc_id", "band_idx", "band_key")
@@ -94,22 +90,19 @@ object IngestNearDup {
           Seq("doc_b"))
         .filter(jac >= JaccardMin)
         .select(col("doc_b").as("doc_id"))
-      val survivors = hsets.select("doc_id")
-        .join(crossDup.union(withinDup).distinct(), Seq("doc_id"), "left_anti")
-        .persist()
-      try {
-        if (!survivors.isEmpty) {
-          batch.join(survivors, Seq("doc_id"), "left_semi")
-            .write.mode(SaveMode.Overwrite)
-            .parquet(s"$acceptedPath/batch_id=$id")
-          batchBands.join(survivors, Seq("doc_id"), "left_semi")
-            .select(bandCols.map(col): _*)
-            .write.mode(SaveMode.Append).insertInto(bandTable)
-          hsets.join(survivors, Seq("doc_id"), "left_semi")
-            .select("doc_id", "hset")
-            .write.mode(SaveMode.Append).insertInto(hsetTable)
-        }
-      } finally survivors.unpersist()
-    } finally hsets.unpersist()
+      val survivors = sc.persist(hsets.select("doc_id")
+        .join(crossDup.union(withinDup).distinct(), Seq("doc_id"), "left_anti"))
+      if (!survivors.isEmpty) {
+        batch.join(survivors, Seq("doc_id"), "left_semi")
+          .write.mode(SaveMode.Overwrite)
+          .parquet(s"$acceptedPath/batch_id=$id")
+        batchBands.join(survivors, Seq("doc_id"), "left_semi")
+          .select(bandCols.map(col): _*)
+          .write.mode(SaveMode.Append).insertInto(bandTable)
+        hsets.join(survivors, Seq("doc_id"), "left_semi")
+          .select("doc_id", "hset")
+          .write.mode(SaveMode.Append).insertInto(hsetTable)
+      }
+    }
   }
 }

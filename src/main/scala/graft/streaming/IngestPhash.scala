@@ -33,18 +33,14 @@ object IngestPhash {
     */
   def run(media: Dataset[MediaRow], table: String, flagsDir: String,
       checkpoint: String): StreamingQuery =
-    media.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: Dataset[MediaRow], id: Long) =>
-        if (!batch.isEmpty) {
-          val s = batch.sparkSession
-          val own = batch.select(col("media_id").as("id_old")).distinct()
-          Multimodal.phashPairsFromIndex(s, table, batch)
-            .join(broadcast(own), Seq("id_old"), "left_anti")
-            .write.mode("overwrite").parquet(s"$flagsDir/batch_id=$id")
-          Multimodal.appendToPhashIndex(s, batch, table)
-        }
+    EventStreams.microBatches(media, checkpoint) { (batch, id) =>
+      if (!batch.isEmpty) {
+        val s = batch.sparkSession
+        val own = batch.select(col("media_id").as("id_old")).distinct()
+        Multimodal.phashPairsFromIndex(s, table, batch)
+          .join(broadcast(own), Seq("id_old"), "left_anti")
+          .write.mode("overwrite").parquet(s"$flagsDir/batch_id=$id")
+        Multimodal.appendToPhashIndex(s, batch, table)
       }
-      .start()
+    }
 }

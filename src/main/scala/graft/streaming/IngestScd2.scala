@@ -40,13 +40,9 @@ object IngestScd2 {
     */
   def run(changes: DataFrame, tablePath: String, keys: Seq[String],
       ts: String, checkpoint: String, buckets: Int = 16): StreamingQuery =
-    changes.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        processBatch(batch.toDF(), tablePath, keys, ts, buckets)
-      }
-      .start()
+    EventStreams.microBatches(changes, checkpoint) { (batch, _) =>
+      processBatch(batch, tablePath, keys, ts, buckets)
+    }
 
   /** One micro-batch apply — public so replay convergence is directly
     * testable.
@@ -71,13 +67,12 @@ object IngestScd2 {
     // the batch's rows become versions chained among themselves (the
     // one-shot scdType2 rule, remaining columns breaking ts ties)
     val tieCols = batch.columns.filterNot(c => keys.contains(c) || c == ts)
-    val newVersions = graft.ops.Maintenance
-      .scdType2(batch, keys, ts, tieCols)
-      .drop(ts)
-      .withColumn("__bucket",
-        IngestUpsert.bucketOf(keys, effBuckets))
-      .persist()
-    try {
+    graft.core.Scope.run { sc =>
+      val newVersions = sc.persist(graft.ops.Maintenance
+        .scdType2(batch, keys, ts, tieCols)
+        .drop(ts)
+        .withColumn("__bucket",
+          IngestUpsert.bucketOf(keys, effBuckets)))
       val touched = newVersions.select("__bucket").distinct()
         .collect().map(_.getInt(0)).toSeq
       // each affected key's FIRST change this batch closes its open row
@@ -111,21 +106,19 @@ object IngestScd2 {
           // the winner is the same content either way.
           val w = Window.partitionBy((keys :+ "valid_from").map(col): _*)
             .orderBy(col("valid_to").desc_nulls_last, col("__src").desc)
-          rewritten.withColumn("__src", lit(0))
+          sc.checkpoint(rewritten.withColumn("__src", lit(0))
             .unionByName(newVersions.withColumn("__src", lit(1)))
             .withColumn("__rk", row_number().over(w))
-            .filter(col("__rk") === 1).drop("__rk", "__src")
-            .localCheckpoint(true)
+            .filter(col("__rk") === 1).drop("__rk", "__src"))
         }
       // writer-scoped dynamic overwrite (see IngestUpsert for why);
       // bucket-per-task repartition before the write for the same
       // small-files reason as IngestUpsert (guide §6)
-      try merged.repartition(effBuckets, col("__bucket"))
+      merged.repartition(effBuckets, col("__bucket"))
         .write.mode(SaveMode.Overwrite)
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("__bucket").parquet(tablePath)
-      finally if (!bootstrap) graft.core.Checkpoint.release(merged)
-    } finally newVersions.unpersist()
+    }
   }
 
   /** The dimension's rows without the routing column. */

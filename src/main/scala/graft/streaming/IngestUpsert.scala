@@ -47,13 +47,9 @@ object IngestUpsert {
   def run(updates: DataFrame, tablePath: String, keys: Seq[String],
       orderCol: String, checkpoint: String, buckets: Int = 16)
       : StreamingQuery =
-    updates.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        processBatch(batch.toDF(), tablePath, keys, orderCol, buckets)
-      }
-      .start()
+    EventStreams.microBatches(updates, checkpoint) { (batch, _) =>
+      processBatch(batch, tablePath, keys, orderCol, buckets)
+    }
 
   /** One micro-batch merge — public so replay idempotence is directly
     * testable: applying the same batch twice must leave the table
@@ -90,12 +86,11 @@ object IngestUpsert {
       .filterNot(c => keys.contains(c) || c == orderCol)
     val w = Window.partitionBy(keys.map(col): _*)
       .orderBy(col(orderCol).desc +: tieCols.map(col(_).desc): _*)
-    val latest = batch
-      .withColumn("__rk", row_number().over(w))
-      .filter(col("__rk") === 1).drop("__rk")
-      .withColumn("__bucket", bucketOf(keys, effBuckets))
-      .persist()
-    try {
+    graft.core.Scope.run { sc =>
+      val latest = sc.persist(batch
+        .withColumn("__rk", row_number().over(w))
+        .filter(col("__rk") === 1).drop("__rk")
+        .withColumn("__bucket", bucketOf(keys, effBuckets)))
       val touched = latest.select("__bucket").distinct()
         .collect().map(_.getInt(0)).toSeq
       // the merge READS the very partitions the write then overwrites:
@@ -113,12 +108,11 @@ object IngestUpsert {
       // identical, so the tie-break elects the same content.
       val merged =
         if (bootstrap) latest
-        else s.read.parquet(tablePath)
+        else sc.checkpoint(s.read.parquet(tablePath)
           .filter(col("__bucket").isin(touched: _*))
           .unionByName(latest)
           .withColumn("__rk", row_number().over(w))
-          .filter(col("__rk") === 1).drop("__rk")
-          .localCheckpoint(true)
+          .filter(col("__rk") === 1).drop("__rk"))
       // writer-scoped dynamic overwrite: no session-global conf toggle
       // for a concurrent query sharing the SparkSession to observe
       // mid-write. Dynamic mode also leaves the root-level
@@ -131,12 +125,11 @@ object IngestUpsert {
       // apply. One bucket per task = one file per bucket directory,
       // the "one shard ≈ one output file" posture buckets are sized
       // for at scale.
-      try merged.repartition(effBuckets, col("__bucket"))
+      merged.repartition(effBuckets, col("__bucket"))
         .write.mode(SaveMode.Overwrite)
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("__bucket").parquet(tablePath)
-      finally if (!bootstrap) graft.core.Checkpoint.release(merged)
-    } finally latest.unpersist()
+    }
   }
 
   /** True when the table path already holds committed bucket data

@@ -124,11 +124,8 @@ object ScaleSoak {
         runs: Int): Seq[Double] =
       (1 to runs).map { _ =>
         graft.Bench.releaseState(spark)
-        val t0 = System.nanoTime()
-        fn(spark, dir).count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        graft.Bench.releaseState(spark)
-        dt
+        try graft.Bench.consume(fn(spark, dir))
+        finally graft.Bench.releaseState(spark)
       }
     def med(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
 
@@ -179,19 +176,13 @@ object ScaleSoak {
             m.group(2).stripPrefix("{").stripSuffix("}").trim)
           .toMap
       } catch { case _: Throwable => Map.empty }
-    // Merge hygiene (ADVICE r14): carried-over rows must not
-    // masquerade as current measurements. Rows with no estimator
-    // field predate the symmetric estimator — tag them so their
-    // provenance rides on the row; rows whose query no longer exists
+    // Merge hygiene (ADVICE r14): rows whose query no longer exists
     // in SparkEntry (renamed/removed) drop on a FULL run (a filtered
     // probe keeps them — it can't know the full set was renamed).
     val fullRun = args.length <= 3
     val prevKept = (prevRows -- Seq("queries"))
       .filter { case (n, _) =>
         !fullRun || graft.SparkEntry.queries.contains(n) }
-      .map { case (n, v) =>
-        n -> (if (v.contains("\"estimator\"")) v
-              else v + ""","estimator":"legacy-soak-min"""") }
     val merged = prevKept ++ rowJson
     val json =
       s"""{"base_sf":"$baseDir","soak_factor":$factor,""" +

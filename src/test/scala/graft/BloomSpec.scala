@@ -61,8 +61,8 @@ class BloomSpec extends SparkSpec {
       .select(col("doc_id"), col("text"))
     val plan = Curation.decontaminateBloomPlan(docs,
         docs.filter(col("doc_id") % 7 === 0), 8, 5L,
-        excludeSelf = true, fpp = 0.01, persist = false)
-      ._1.queryExecution.executedPlan.toString
+        excludeSelf = true, fpp = 0.01, persist = identity)
+      .queryExecution.executedPlan.toString
     assert(plan.contains("bloom_might_contain"))
     // the probe must sit on the corpus scan side as a Filter, not be
     // computed post-join

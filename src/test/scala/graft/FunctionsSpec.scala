@@ -349,7 +349,7 @@ class FunctionsSpec extends SparkSpec {
             s"${root.relativize(p)}:${i + 1}"
         }
       }
-    assert(uses.toSet == Set("graft/llm/Curation.scala:90", "graft/llm/Curation.scala:613"),
+    assert(uses.toSet == Set("graft/llm/Curation.scala:90", "graft/llm/Curation.scala:605"),
       uses)
   }
 }

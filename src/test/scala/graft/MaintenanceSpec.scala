@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.ops.Maintenance
 
@@ -190,6 +191,27 @@ class MaintenanceSpec extends SparkSpec {
     // the naive two-term maintenance silently under-counts
     assert(twoTerm < full,
       s"fixture has no delta-delta matches — corner-term claim untested")
+  }
+
+  test("q60/q61 delete their CDC scratch table before returning, and their " +
+      "rows equal the one-shot results") {
+    val tmp = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+    def scratch(): Set[String] = Option(tmp.toFile.list()).toSet.flatten
+      .filter(_.startsWith("graft_"))
+    def rows(d: DataFrame) = d.collect().map(_.toSeq).toSet
+    val before = scratch()
+    val q60 = rows(Maintenance.q60CdcUpsert(spark, sfDir))
+    val q61 = rows(Maintenance.q61CdcScd2(spark, sfDir))
+    assert(scratch() -- before == Set.empty[String])
+    // q60: window-latest per key over both batches (v2 updates evens)
+    val even = col("doc_id") % 2 === 0
+    val want60 = rows(graft.core.Tables.load(spark, sfDir, "documents")
+      .select(col("doc_id"), col("source"),
+        when(even, col("n_chars") + 7).otherwise(col("n_chars")).as("n_chars"),
+        when(even, lit(2L)).otherwise(lit(1L)).as("ver")))
+    assert(q60.nonEmpty && q60 == want60)
+    // q61: the incremental dimension equals q55's one-shot SCD2
+    assert(q61.nonEmpty && q61 == rows(Maintenance.q55Scd2(spark, sfDir)))
   }
 
   test("skew handling measured: AQE skew-join split vs explicit salting " +

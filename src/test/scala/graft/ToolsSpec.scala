@@ -28,7 +28,8 @@ class ToolsSpec extends SparkSpec {
       "sf", "warmup_sec", "queries"))
     assert(keys(detail) == Set("fp_method", "sf", "plans_changed",
       "plans_changed_base", "recall", "recall_floors", "recall_failures",
-      "filtered_recall_sweep", "plans"))
+      "failed", "filtered_recall_sweep", "plans"))
+    assert(keys(detail.get("failed")).isEmpty)
     assert(keys(summary.get("queries")) == selected)
     assert(keys(detail.get("plans")) == selected)
     for (q <- selected) {
