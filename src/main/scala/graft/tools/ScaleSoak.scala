@@ -154,11 +154,12 @@ object ScaleSoak {
       rows.map { case (n, b, bruns, sk, runs2, sc) =>
         // per-row factor: merged artifacts can carry rows measured
         // under different run configurations, so provenance must ride
-        // on the row, not only the (current-run) header
+        // on the row, not only the (current-run) header. "-noop": timed
+        // by Bench.consume; rows tagged without it were timed by count()
         n -> (s""""base_sec":${f3(b)},"soak_sec":${f3(sk)},""" +
           s""""base_runs":[${bruns.map(f3).mkString(",")}],""" +
           s""""soak_runs":[${runs2.map(f3).mkString(",")}],""" +
-          s""""estimator":"median-of-3-both-sides",""" +
+          s""""estimator":"median-of-3-both-sides-noop",""" +
           s""""factor":$factor,"scale":${f3(sc)}""")
       }.toMap
     // A FILTERED run merges its rows into the existing artifact (in
